@@ -195,12 +195,20 @@ def main() -> int:
     # experiment escape hatch in session.py, but the BENCH must not be
     # silently tunable through it — ignore it here and record what was
     # ignored in the artifact so a tuned run is visible, not invisible.
-    extra_confs_ignored = os.environ.pop("SPARK_GRAFT_EXTRA_CONFS", None)
+    # The session builder reads it from the environment, so it is unset
+    # only while the session is built and put back for everything else
+    # in this process.
+    extra_confs_ignored = os.environ.get("SPARK_GRAFT_EXTRA_CONFS")
 
     from go_triton_spark.session import get_spark
     from go_triton_spark.operators import REGISTRY
 
-    spark = get_spark("go-triton-spark-bench")
+    os.environ.pop("SPARK_GRAFT_EXTRA_CONFS", None)
+    try:
+        spark = get_spark("go-triton-spark-bench")
+    finally:
+        if extra_confs_ignored is not None:
+            os.environ["SPARK_GRAFT_EXTRA_CONFS"] = extra_confs_ignored
     spark.sparkContext.setLogLevel("ERROR")
 
     # JVM/codegen/scan-path warmup (not counted): a trivial codegen plan

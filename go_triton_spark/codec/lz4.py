@@ -1,30 +1,19 @@
-"""Pure-Python LZ4: block format + frame format (lz4.org public spec).
+"""Pure-Python LZ4 encoder: block format + frame format (lz4.org spec).
 
-LZ4-framed JSONL is one of the two dominant dataset-shard compressions
-in large-scale LLM corpora (the other is zstd, codec/zstd.py) — e.g.
-``.jsonl.lz4`` shards on object stores. Nothing in this container ships
-an lz4 binding, so both directions are implemented from the public
-specs (lz4_Block_format.md / lz4_Frame_format.md, lz4.github.io):
+Builds ``.jsonl.lz4`` shards for the LZ4 ingest query, which decodes
+them with liblz4 (codec/compressed.py). The frames carry per-block
+xxHash32 checksums, which pyarrow's LZ4 frame writer omits, so a
+flipped byte inside a block is caught on read. Implemented from the
+public specs (lz4_Block_format.md / lz4_Frame_format.md, lz4.github.io):
 
-- ``block_decompress`` — the token / literal-run / 16-bit-offset /
-  match-run sequence grammar, including the 255-byte length-extension
-  chains and overlapping back-references (offset < match length copies
-  byte-at-a-time, the format's RLE idiom).
 - ``block_compress`` — greedy single-probe hash-table matcher honoring
   the spec's end conditions (last 5 bytes literal, no match starting
   within the last 12 bytes); round-trips through any compliant decoder.
-- ``frame_compress`` / ``frame_decompress`` — magic 0x184D2204, FLG/BD
-  descriptor with xxHash32 header checksum, per-block checksums, the
-  EndMark, and the whole-content xxHash32 trailer. Both block modes
-  decode: independent blocks and liblz4's default LINKED blocks (match
-  offsets reaching up to 64 KiB into prior blocks' history); the
-  encoder emits independent blocks.
+- ``frame_compress`` — magic 0x184D2204, FLG/BD descriptor with
+  xxHash32 header checksum, independent blocks with per-block
+  checksums, the EndMark, and the whole-content xxHash32 trailer.
 - ``xxh32`` — complete xxHash32 (the frame format's only checksum
   primitive), validated against the reference vectors in its spec.
-
-Error policy matches the rest of the codec package: malformed input
-raises ``Lz4Error`` (a ValueError) so the ingest operators' corrupt-skip
-contract can catch precisely.
 """
 
 from __future__ import annotations
@@ -35,10 +24,6 @@ _MAGIC = 0x184D2204
 
 # Block-max-size table: BD byte bits 6-4 (values 4..7 are legal).
 _BLOCK_MAX = {4: 1 << 16, 5: 1 << 18, 6: 1 << 20, 7: 1 << 22}
-
-
-class Lz4Error(ValueError):
-    """Raised on malformed LZ4 input."""
 
 
 # ------------------------------------------------------------------ xxh32
@@ -93,72 +78,6 @@ def xxh32(data: bytes, seed: int = 0) -> int:
 
 
 # ------------------------------------------------------------------ block
-
-def block_decompress(buf: bytes, max_size: int = 1 << 26,
-                     prefix: bytes = b"") -> bytes:
-    """Decode one LZ4 block (raw sequence grammar, no framing).
-
-    ``prefix`` is decode history a linked-block frame may back-reference
-    (up to the format's 64 KiB window); only the newly decoded bytes are
-    returned.
-    """
-    out = bytearray(prefix)
-    base = len(prefix)
-    max_size += base
-    pos = 0
-    n = len(buf)
-    while True:
-        if pos >= n:
-            raise Lz4Error("truncated LZ4 block: missing token")
-        token = buf[pos]
-        pos += 1
-        lit_len = token >> 4
-        if lit_len == 15:
-            while True:
-                if pos >= n:
-                    raise Lz4Error("truncated literal-length extension")
-                ext = buf[pos]
-                pos += 1
-                lit_len += ext
-                if ext != 255:
-                    break
-        if pos + lit_len > n:
-            raise Lz4Error("literal run past end of block")
-        out += buf[pos:pos + lit_len]
-        pos += lit_len
-        if len(out) > max_size:
-            raise Lz4Error("decoded block exceeds size bound")
-        if pos == n:
-            # Legal end: the final sequence is literals-only.
-            return bytes(out[base:])
-        if pos + 2 > n:
-            raise Lz4Error("truncated match offset")
-        offset = buf[pos] | (buf[pos + 1] << 8)
-        pos += 2
-        if offset == 0:
-            raise Lz4Error("invalid zero match offset")
-        if offset > len(out):
-            raise Lz4Error("match offset before start of output")
-        match_len = (token & 0x0F) + 4
-        if (token & 0x0F) == 15:
-            while True:
-                if pos >= n:
-                    raise Lz4Error("truncated match-length extension")
-                ext = buf[pos]
-                pos += 1
-                match_len += ext
-                if ext != 255:
-                    break
-        if len(out) + match_len > max_size:
-            raise Lz4Error("decoded block exceeds size bound")
-        start = len(out) - offset
-        if offset >= match_len:
-            out += out[start:start + match_len]
-        else:
-            # Overlapping copy: the spec's repeating-pattern semantics.
-            for i in range(match_len):
-                out.append(out[start + i])
-
 
 def block_compress(data: bytes) -> bytes:
     """Greedy LZ4 block encoder (single-probe hash table).
@@ -230,7 +149,7 @@ def frame_compress(data: bytes, block_max_id: int = 4,
                    content_size: bool = True) -> bytes:
     """Assemble an LZ4 frame (independent blocks, v01 descriptor)."""
     if block_max_id not in _BLOCK_MAX:
-        raise Lz4Error(f"illegal block-max id {block_max_id}")
+        raise ValueError(f"illegal block-max id {block_max_id}")
     flg = (0x01 << 6) | (1 << 5)           # version 01, independent
     if block_checksum:
         flg |= 1 << 4
@@ -262,116 +181,3 @@ def frame_compress(data: bytes, block_max_id: int = 4,
     if content_checksum:
         out += struct.pack("<I", xxh32(data))
     return bytes(out)
-
-
-_SKIP_MAGIC_LO = 0x184D2A50     # skippable frames: 0x184D2A50..5F
-_SKIP_MAGIC_HI = 0x184D2A5F
-
-
-def frame_decompress(buf: bytes) -> bytes:
-    """Decode an LZ4 frame STREAM — one or more concatenated frames,
-    with skippable frames passed over — to the concatenated content,
-    verifying every checksum that is present. liblz4 semantics (r10):
-    the old single-frame decode silently IGNORED everything after the
-    first EndMark, so a concatenated shard lost its tail with no
-    error AND diverged from the native liblz4 fast path, which
-    decodes all frames. Trailing garbage now fails loudly."""
-    if len(buf) < 7:
-        raise Lz4Error("truncated LZ4 frame header")
-    out = bytearray()
-    pos = 0
-    while pos < len(buf):
-        if pos + 4 > len(buf):
-            raise Lz4Error("trailing garbage after LZ4 frame")
-        (magic,) = struct.unpack_from("<I", buf, pos)
-        if _SKIP_MAGIC_LO <= magic <= _SKIP_MAGIC_HI:
-            if pos + 8 > len(buf):
-                raise Lz4Error("truncated LZ4 skippable frame header")
-            (sk,) = struct.unpack_from("<I", buf, pos + 4)
-            pos += 8 + sk
-            if pos > len(buf):
-                raise Lz4Error("truncated LZ4 skippable frame body")
-            continue
-        chunk, pos = _decode_one_frame(buf, pos)
-        out += chunk
-    return bytes(out)
-
-
-def _decode_one_frame(buf: bytes, start: int) -> "tuple[bytes, int]":
-    """Decode the single LZ4 frame at ``start``; returns (content,
-    offset just past the frame). Linked-block history is per-frame by
-    spec — it never crosses a frame boundary."""
-    if start + 7 > len(buf):
-        raise Lz4Error("truncated LZ4 frame header")
-    (magic,) = struct.unpack_from("<I", buf, start)
-    if magic != _MAGIC:
-        raise Lz4Error(f"bad LZ4 magic 0x{magic:08x}")
-    flg = buf[start + 4]
-    bd = buf[start + 5]
-    if (flg >> 6) != 0x01:
-        raise Lz4Error(f"unsupported LZ4 frame version {flg >> 6}")
-    linked = not (flg >> 5) & 1   # liblz4's default mode
-    if flg & 0x02:
-        raise Lz4Error("reserved FLG bit set")
-    block_checksum = bool((flg >> 4) & 1)
-    has_size = bool((flg >> 3) & 1)
-    content_checksum = bool((flg >> 2) & 1)
-    has_dict = bool(flg & 1)
-    bmax_id = (bd >> 4) & 0x07
-    if bmax_id not in _BLOCK_MAX:
-        raise Lz4Error(f"illegal block-max id {bmax_id}")
-    pos = start + 6
-    declared = None
-    if has_size:
-        if pos + 8 > len(buf):
-            raise Lz4Error("truncated LZ4 frame descriptor")
-        (declared,) = struct.unpack_from("<Q", buf, pos)
-        pos += 8
-    if has_dict:
-        pos += 4   # dictID — legal to carry; content is dict-free
-    if pos >= len(buf):
-        raise Lz4Error("truncated LZ4 frame descriptor")
-    hc = buf[pos]
-    pos += 1
-    if hc != (xxh32(buf[start + 4:pos - 1]) >> 8) & 0xFF:
-        raise Lz4Error("LZ4 frame header checksum mismatch")
-    out = bytearray()
-    bmax = _BLOCK_MAX[bmax_id]
-    while True:
-        if pos + 4 > len(buf):
-            raise Lz4Error("truncated LZ4 frame: missing block size")
-        (bsize,) = struct.unpack_from("<I", buf, pos)
-        pos += 4
-        if bsize == 0:
-            break
-        uncompressed = bool(bsize & 0x80000000)
-        bsize &= 0x7FFFFFFF
-        if bsize > bmax:
-            raise Lz4Error("block larger than declared maximum")
-        if pos + bsize > len(buf):
-            raise Lz4Error("truncated LZ4 block body")
-        body = buf[pos:pos + bsize]
-        pos += bsize
-        if block_checksum:
-            if pos + 4 > len(buf):
-                raise Lz4Error("truncated block checksum")
-            (want,) = struct.unpack_from("<I", buf, pos)
-            pos += 4
-            if xxh32(body) != want:
-                raise Lz4Error("LZ4 block checksum mismatch")
-        if uncompressed:
-            out += body
-        else:
-            history = bytes(out[-65536:]) if linked else b""
-            out += block_decompress(body, bmax, prefix=history)
-    if content_checksum:
-        if pos + 4 > len(buf):
-            raise Lz4Error("truncated content checksum")
-        (want,) = struct.unpack_from("<I", buf, pos)
-        pos += 4
-        if xxh32(bytes(out)) != want:
-            raise Lz4Error("LZ4 content checksum mismatch")
-    if declared is not None and declared != len(out):
-        raise Lz4Error("content size mismatch "
-                       f"(declared {declared}, decoded {len(out)})")
-    return bytes(out), pos

@@ -1,10 +1,10 @@
-"""Compressed text-shard ingest: `.jsonl.lz4` / `.jsonl.zst`.
+"""Compressed text-shard ingest: `.jsonl.lz4` / `.jsonl.xz` / `.jsonl.zst`.
 
-The two compressions that actually wrap large public LLM corpora on
-object stores — zstd (The Pile, Dolma, RedPajama releases) and LZ4
-frames — decoded by this package's own pure-Python codecs
-(codec/lz4.py, codec/zstd.py) since neither binding ships in this
-container. Each query synthesizes per-doc shards from the documents
+The compressions that actually wrap large public LLM corpora on object
+stores — zstd (The Pile, Dolma, RedPajama releases), xz and LZ4
+frames — decoded by one function, ``codec.compressed.decompress``, on
+the system libraries (stdlib lzma; libzstd and liblz4 bundled in
+pyarrow). Each query synthesizes per-doc shards from the documents
 table (scaffolding — production shards arrive via
 ``spark.read.format("binaryFile")``), then runs the REAL pipeline: frame
 decode -> JSONL parse -> per-record projection, with checksum-gated
@@ -81,10 +81,11 @@ def _extract_records(doc_id: int, payload: bytes) -> list[tuple]:
     tags=("llm", "text", "ingest"),
 )
 def text_lz4_jsonl_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`.jsonl.lz4` shard ingest through the pure-Python LZ4 frame
-    decoder (codec/lz4.py): magic + descriptor with xxHash32 header
+    """`.jsonl.lz4` shard ingest: the shards are built by this
+    package's LZ4 frame encoder (codec/lz4.py: xxHash32 header
     checksum, greedy-compressed blocks with per-block xxHash32, the
-    EndMark and whole-content checksum — all verified on read.
+    EndMark and whole-content checksum) and decoded by liblz4, which
+    verifies every checksum on read.
 
     Corruption flips one byte inside the first block's body on every
     173rd shard; the block checksum rejects it and the shard is
@@ -93,8 +94,9 @@ def text_lz4_jsonl_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     fire (the second record compresses to a match chain, not
     literals).
     """
-    from go_triton_spark.codec.lz4 import Lz4Error, frame_compress, \
-        frame_decompress
+    from go_triton_spark.codec.compressed import DecompressError, \
+        decompress
+    from go_triton_spark.codec.lz4 import frame_compress
 
     (d,) = tables(spark, sf_dir, "documents")
     src = spread(d.select("doc_id", "text"), spark, rows_per_task=500)
@@ -109,14 +111,8 @@ def text_lz4_jsonl_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 if doc_id % 173 == 11:
                     shard[min(22, len(shard) - 6)] ^= 0xFF
                 try:
-                    # opt-in native fast path (TRITON_NATIVE_DECODE=1):
-                    # liblz4 when it accepts the frame, else the pure
-                    # decoder — which keeps the typed corrupt-skip
-                    from go_triton_spark.codec.native import \
-                        decompress_with_fallback
-                    payload = decompress_with_fallback(
-                        "lz4", bytes(shard), frame_decompress)
-                except Lz4Error:
+                    payload = decompress("lz4", bytes(shard))
+                except DecompressError:
                     continue  # corrupt-skip
                 rows.extend(_extract_records(doc_id, payload))
             yield pd.DataFrame(
@@ -132,22 +128,19 @@ def text_lz4_jsonl_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_xz_jsonl_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`.jsonl.xz` shard ingest — the other compression real corpora
-    ship in (Wikipedia dumps, The Pile's .jsonl.xz variants) — through
-    the pure-Python XZ/LZMA2/LZMA decoder (codec/xz.py): adaptive
-    range coder, 12-state machine, LZMA2 chunk framing with dict
-    resets, and the full container layer (block-header CRC32, CRC64
-    block check, index + footer CRC32).
+    ship in (Wikipedia dumps, The Pile's .jsonl.xz variants). The
+    shards are compressed and decoded by stdlib ``lzma`` (liblzma on
+    every executor), which verifies the container's layered checks
+    (block-header CRC32, CRC64 block check, index + footer CRC32).
 
-    The shards are compressed by stdlib ``lzma`` — real liblzma on
-    every executor — so the driver gate is a standing
-    cross-implementation differential test of the whole decoder.
     Corruption flips one byte in the middle of every 173rd shard's
     compressed data; a layered CRC rejects it and the shard is
     skipped (counted by the oracle's WHERE).
     """
     import lzma
 
-    from go_triton_spark.codec.xz import XzError, xz_decompress
+    from go_triton_spark.codec.compressed import DecompressError, \
+        decompress
 
     (d,) = tables(spark, sf_dir, "documents")
     src = spread(d.select("doc_id", "text"), spark, rows_per_task=500)
@@ -163,11 +156,8 @@ def text_xz_jsonl_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 if doc_id % 173 == 47:
                     shard[len(shard) // 2] ^= 0xFF
                 try:
-                    from go_triton_spark.codec.native import \
-                        decompress_with_fallback
-                    payload = decompress_with_fallback(
-                        "xz", bytes(shard), xz_decompress)
-                except XzError:
+                    payload = decompress("xz", bytes(shard))
+                except DecompressError:
                     continue  # corrupt-skip
                 rows.extend(_extract_records(doc_id, payload))
             yield pd.DataFrame(
@@ -183,22 +173,16 @@ def text_xz_jsonl_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_zst_jsonl_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`.jsonl.zst` shard ingest — the compression wrapping most large
-    public text corpora (The Pile, Dolma, RedPajama) — through the
-    pure-Python RFC 8878 decoder (codec/zstd.py): FSE-described and
-    predefined sequence tables, Huffman literals (1- and 4-stream),
-    repeat offsets, full frame layer.
-
-    The shards are compressed by the REAL libzstd bundled in pyarrow
-    (available on every executor), so the driver gate doubles as a
-    cross-implementation differential test: any entropy-decode bug
-    shifts the codepoint-sum column. Corruption truncates the final
-    byte of every 173rd shard — structurally detected regardless of
-    where the frame ends (missing bitstream sentinel / overrun block),
-    since libzstd frames carry no content checksum by default.
+    public text corpora (The Pile, Dolma, RedPajama). The shards are
+    compressed and decoded by the libzstd bundled in pyarrow
+    (available on every executor). Corruption truncates the final
+    byte of every 173rd shard — structurally detected as a truncated
+    frame, since libzstd frames carry no content checksum by default.
     """
     import pyarrow as pa
 
-    from go_triton_spark.codec.zstd import ZstdError, decompress
+    from go_triton_spark.codec.compressed import DecompressError, \
+        decompress
 
     (d,) = tables(spark, sf_dir, "documents")
     src = spread(d.select("doc_id", "text"), spark, rows_per_task=500)
@@ -215,11 +199,8 @@ def text_zst_jsonl_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 if doc_id % 173 == 29:
                     shard = shard[:-1]
                 try:
-                    from go_triton_spark.codec.native import \
-                        decompress_with_fallback
-                    payload = decompress_with_fallback(
-                        "zstd", shard, decompress)
-                except ZstdError:
+                    payload = decompress("zstd", shard)
+                except DecompressError:
                     continue  # corrupt-skip
                 rows.extend(_extract_records(doc_id, payload))
             yield pd.DataFrame(

@@ -1,5 +1,5 @@
-"""codec/lz4.py: xxh32 vectors, frame/block goldens, round trips,
-corrupt gates."""
+"""codec/lz4.py encoder and liblz4 decoding through codec/compressed.py:
+xxh32 vectors, frame/block goldens, round trips, corrupt gates."""
 
 import struct
 
@@ -7,14 +7,21 @@ import pytest
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
-from go_triton_spark.codec.lz4 import (
-    Lz4Error,
-    block_compress,
-    block_decompress,
-    frame_compress,
-    frame_decompress,
-    xxh32,
-)
+from go_triton_spark.codec.compressed import DecompressError, decompress
+from go_triton_spark.codec.lz4 import block_compress, frame_compress, xxh32
+
+
+def frame_decompress(data):
+    return decompress("lz4", data)
+
+
+def block_decompress(block):
+    """Decode one raw block, wrapped in a minimal one-block frame."""
+    desc = bytes([0x60, 0x40])     # version 01, independent, 64 KiB max
+    return frame_decompress(
+        struct.pack("<I", 0x184D2204) + desc
+        + bytes([(xxh32(desc) >> 8) & 0xFF])
+        + struct.pack("<I", len(block)) + block + struct.pack("<I", 0))
 
 
 def test_xxh32_public_vectors():
@@ -29,10 +36,14 @@ def test_xxh32_public_vectors():
 def test_block_golden_hand_decoded():
     """Hand-packed block: token 0x54 = 5 literals + (4+4)-byte
     overlapping match at offset 5 ('hello' repeated into itself for 8
-    bytes); then a literals-only tail."""
-    blk = bytes([0x54]) + b"hello" + struct.pack("<H", 5) \
-        + bytes([0x10]) + b"X"
-    assert block_decompress(blk) == b"hellohellohelX"
+    bytes); then a literals-only tail. The spec's end-of-block rule
+    wants the last 5 bytes to be literals, so a 1-literal tail is
+    rejected."""
+    head = bytes([0x54]) + b"hello" + struct.pack("<H", 5)
+    assert block_decompress(head + bytes([0x50]) + b"Xtail") \
+        == b"hellohellohelXtail"
+    with pytest.raises(DecompressError):
+        block_decompress(head + bytes([0x10]) + b"X")
 
 
 def test_block_overlap_rle():
@@ -45,10 +56,10 @@ def test_block_overlap_rle():
 
 
 def test_block_rejects_zero_offset_and_far_offset():
-    with pytest.raises(Lz4Error):
+    with pytest.raises(DecompressError):
         block_decompress(bytes([0x10]) + b"A" + struct.pack("<H", 0)
                          + bytes([0x00]))
-    with pytest.raises(Lz4Error):
+    with pytest.raises(DecompressError):
         block_decompress(bytes([0x10]) + b"A" + struct.pack("<H", 9)
                          + bytes([0x00]))
 
@@ -84,14 +95,14 @@ def test_frame_corrupt_rejected(mutate_at):
     f = bytearray(frame_compress(b"hello world " * 50))
     pos = {"header": 4, "block": 20, "trailer": len(f) - 2}[mutate_at]
     f[pos] ^= 0xFF
-    with pytest.raises(Lz4Error):
+    with pytest.raises(DecompressError):
         frame_decompress(bytes(f))
 
 
 def test_frame_truncation_rejected():
     f = frame_compress(b"hello world " * 50)
     for cut in (3, 6, 10, len(f) // 2, len(f) - 1):
-        with pytest.raises(Lz4Error):
+        with pytest.raises(DecompressError):
             frame_decompress(f[:cut])
 
 
@@ -106,9 +117,9 @@ def _pb(x):
 
 
 def test_cross_implementation_against_liblz4():
-    """Differential check against the REAL liblz4 bundled in pyarrow:
-    its frames (linked-block mode, multi-block at 300 KB) decode here,
-    and this encoder's frames decode there."""
+    """Frames from the liblz4 bundled in pyarrow (linked-block mode,
+    multi-block at 300 KB) decode here, and this encoder's frames
+    decode in pyarrow's codec too."""
     import random
 
     pa = pytest.importorskip("pyarrow")

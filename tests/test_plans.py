@@ -7,6 +7,8 @@ top-k as TakeOrderedAndProject (never a global sort), broadcast
 dimension joins, partition pruning on the archive table.
 """
 
+import re
+
 import pytest
 
 from go_triton_spark.operators import REGISTRY
@@ -382,6 +384,27 @@ def test_qgram_single_gram_rank_pass(spark):
             assert not ("gram#" in line and "bucket#" in line), line
 
 
+def _node_name(node: str) -> str:
+    """Operator name of a plan-tree node line, without the
+    whole-stage-codegen '*(n) ' marker."""
+    return re.sub(r"^\*\(\d+\) ", "", node).split(" ", 1)[0]
+
+
+def _below_exchange(plan: str):
+    """Yield every node of a physical-plan tree string that has an
+    Exchange among its ancestors; a node's depth is the width of its
+    ' :+-' indentation prefix."""
+    ancestors: list[tuple[int, bool]] = []   # (depth, is Exchange)
+    for line in plan.splitlines():
+        node = line.lstrip(" :+-")
+        depth = len(line) - len(node)
+        while ancestors and ancestors[-1][0] >= depth:
+            ancestors.pop()
+        if any(is_ex for _, is_ex in ancestors):
+            yield node
+        ancestors.append((depth, "Exchange" in _node_name(node)))
+
+
 def test_shingle_chain_evaluates_once(spark):
     """r13 shape contract for _shingle_df: the interpreted shingle
     chain (split -> transform -> array_distinct) must appear ONCE in
@@ -400,13 +423,9 @@ def test_shingle_chain_evaluates_once(spark):
         # the one evaluation sits above the exchange: no Filter with
         # the chain below an Exchange (scan-stage filters carry no
         # concat_ws at all)
-        below_exchange = False
-        for line in plan.splitlines():
-            if "Exchange" in line:
-                below_exchange = True
-                continue
-            if below_exchange and "Filter" in line:
-                assert "concat_ws" not in line, line
+        for node in _below_exchange(plan):
+            if _node_name(node) == "Filter":
+                assert "concat_ws" not in node, node
     finally:
         df.unpersist()
 

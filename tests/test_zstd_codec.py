@@ -1,38 +1,41 @@
-"""codec/zstd.py: xxh64 vectors, RFC 8878 decode differentially
-validated against the REAL libzstd bundled in pyarrow, frame goldens,
-corrupt gates."""
+"""zstd through codec/compressed.py: libzstd round trips over levels
+and entropy paths, hand-built RFC 8878 raw-block frames, corrupt
+gates."""
 
 import random
+import shutil
 import struct
+import subprocess
 
+import pyarrow as pa
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from go_triton_spark.codec.zstd import (
-    ZstdError,
-    compress,
-    decompress,
-    xxh64,
-)
-
-pa = pytest.importorskip("pyarrow")
+from go_triton_spark.codec.compressed import DecompressError
+from go_triton_spark.codec.compressed import decompress as _decompress
 
 
-def _pb(x):
-    return x.to_pybytes() if hasattr(x, "to_pybytes") else bytes(x)
+def decompress(data):
+    return _decompress("zstd", data)
 
 
 def _zstd(data, level=3):
-    return _pb(pa.Codec("zstd", compression_level=level).compress(data))
+    return pa.Codec("zstd", compression_level=level).compress(
+        data).to_pybytes()
 
 
-def test_xxh64_public_vectors():
-    assert xxh64(b"") == 0xEF46DB3751D8E999
-    assert xxh64(b"a") == 0xD24EC4F1A98C6E5B
-    # >32-byte input exercises the 4-lane stripe loop + merge rounds
-    assert xxh64(b"a" * 101, seed=1) == xxh64(b"a" * 101, seed=1)
-    assert xxh64(b"a" * 101) != xxh64(b"a" * 100)
+def _raw_frame(data):
+    """RFC 8878 frame of raw blocks: Single_Segment with an 8-byte
+    Frame_Content_Size, no checksum, blocks of at most 128 KiB."""
+    out = bytearray(struct.pack("<IBQ", 0xFD2FB528, 0xE0, len(data)))
+    step = 1 << 17
+    starts = range(0, len(data), step) if data else [0]
+    for i in starts:
+        chunk = data[i:i + step]
+        last = i + step >= len(data)
+        out += (len(chunk) << 3 | last).to_bytes(3, "little") + chunk
+    return bytes(out)
 
 
 @pytest.mark.parametrize("level", [1, 3, 19])
@@ -72,24 +75,29 @@ def test_raw_block_frames_accepted_by_libzstd():
     rng = random.Random(4)
     for n in (0, 5, 1000, 300000):
         data = bytes(rng.randrange(256) for _ in range(n))
-        assert _pb(pa.Codec("zstd").decompress(compress(data), n)) == data
-        assert decompress(compress(data)) == data
+        assert decompress(_raw_frame(data)) == data
 
 
 def test_own_frame_checksum_catches_flips():
-    """The raw-block writer emits the xxh64-low32 content checksum, so
-    every payload byte flip is caught."""
+    """The zstd CLI writes the content checksum by default, so every
+    byte flip is caught."""
+    if not shutil.which("zstd"):
+        pytest.skip("zstd CLI not on PATH")
     data = b"the quick brown fox " * 20
-    f = bytearray(compress(data))
-    f[20] ^= 0xFF
-    with pytest.raises(ZstdError):
-        decompress(bytes(f))
+    f = subprocess.run(["zstd", "-q", "-c", "--no-progress"], input=data,
+                       capture_output=True, check=True).stdout
+    assert decompress(f) == data
+    for i in range(len(f)):
+        bad = bytearray(f)
+        bad[i] ^= 0xFF
+        with pytest.raises(DecompressError):
+            decompress(bytes(bad))
 
 
 def test_truncation_always_rejected():
     z = _zstd(b"the quick brown fox jumps over the lazy dog " * 300, 19)
     for cut in (2, 5, len(z) // 2, len(z) - 1):
-        with pytest.raises(ZstdError):
+        with pytest.raises(DecompressError):
             decompress(z[:cut])
 
 
@@ -98,16 +106,16 @@ def test_dictionary_frames_rejected_loudly():
     z = bytearray(_zstd(b"hello hello hello"))
     z[4] |= 0x01                    # set Dictionary_ID_flag to 1 byte
     z.insert(5 + (1 if not (z[4] >> 5) & 1 else 0), 42)
-    with pytest.raises(ZstdError):
+    with pytest.raises(DecompressError):
         decompress(bytes(z))
 
 
 def test_reserved_block_type_rejected():
-    f = bytearray(compress(b"abc", checksum=False))
-    # block header starts after magic(4) + fhd(1) + fcs(1)
-    hdr = int.from_bytes(f[6:9], "little") | 0b110
-    f[6:9] = hdr.to_bytes(3, "little")
-    with pytest.raises(ZstdError):
+    f = bytearray(_raw_frame(b"abc"))
+    # block header starts after magic(4) + fhd(1) + fcs(8)
+    hdr = int.from_bytes(f[13:16], "little") | 0b110
+    f[13:16] = hdr.to_bytes(3, "little")
+    with pytest.raises(DecompressError):
         decompress(bytes(f))
 
 
@@ -124,4 +132,4 @@ def test_round_trip_property_via_libzstd(seed, n, level):
     else:
         data = (b"zstd " * (n // 5 + 1))[:n]
     assert decompress(_zstd(data, level)) == data
-    assert decompress(compress(data)) == data
+    assert decompress(_raw_frame(data)) == data
