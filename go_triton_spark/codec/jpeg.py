@@ -863,7 +863,7 @@ def _finish(frame, qt) -> np.ndarray:
     return np.clip(np.round(rgb), 0, 255).astype(np.uint8)
 
 
-def parse_jpeg(data: bytes, prefer_native: "bool | None" = None) -> dict:
+def parse_jpeg(data: bytes) -> dict:
     """Decode one complete JPEG — baseline sequential (SOF0) or
     progressive (SOF2, spectral selection + successive approximation,
     round 7) — and return pixels + metadata.
@@ -875,19 +875,24 @@ def parse_jpeg(data: bytes, prefer_native: "bool | None" = None) -> dict:
     truncation, missing tables, invalid Huffman codes, or unsupported
     modes (arithmetic, lossless, hierarchical, 12-bit).
 
-    With ``prefer_native=True`` (or TRITON_NATIVE_DECODE=1) decode
-    routes through the system libjpeg via the compiled shim (codec/
-    native.py). NOTE: conforming but NOT bit-identical — T.81 leaves
-    IDCT precision implementation-defined (this decoder: exact float
-    IDCT + round-half-even; libjpeg: islow integer IDCT); measured
+    Streams inside the pure accept set decode through the system
+    libjpeg via the compiled shim (codec/native.py). NOTE: conforming
+    but NOT bit-identical — T.81 leaves IDCT precision
+    implementation-defined (the pure decoder: exact float IDCT +
+    round-half-even; libjpeg: islow integer IDCT); measured
     per-channel delta is within +-2, pinned by
-    tests/test_native_fastpath.py. Misses fall back here.
+    tests/test_native_fastpath.py. Every other stream, and any native
+    miss, takes the pure decoder ``_parse_jpeg_pure``.
     """
     from go_triton_spark.codec import native as _native
 
-    m = _native.maybe_image("jpeg", data, prefer_native)
-    if m is not None:
-        return m
+    m = _native.maybe_image("jpeg", data)
+    return m if m is not None else _parse_jpeg_pure(data)
+
+
+def _parse_jpeg_pure(data: bytes) -> dict:
+    """The pure decoder behind parse_jpeg: same contract, and the
+    reference the native parity tests compare against."""
     if len(data) < 4 or data[:2] != b"\xFF\xD8":
         raise ValueError("not a JPEG file (bad SOI)")
     pos = 2

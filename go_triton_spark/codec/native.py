@@ -1,4 +1,4 @@
-"""Native decode fast path (r9 verdict Next #2; default-ON since r12).
+"""Native decode fast path (r9 verdict Next #2).
 
 The clean-room pure-Python image and audio codecs
 (vp8/vp8l/png/jpeg/tiff/...) are the correctness story: differentially
@@ -28,16 +28,17 @@ output contracts:
 The byte decompressors (zstd / lz4 / xz) are not here: they have one
 path only, on the system libraries (codec/compressed.py).
 
-Routing policy (see parse_image / parse_webp / parse_png / ...):
-the native attempt is ON BY DEFAULT since the r12 optimization round
-(disable with ``TRITON_NATIVE_DECODE=0`` or ``prefer_native=False``),
-and ANY native failure — library missing, unsupported feature,
-rejected bytes — falls back to the pure decoder, which keeps the loud
-corrupt-skip ValueError contract byte-for-byte identical to the pure
-path. The pytest suite pins the PURE path as its default
-(tests/conftest.py sets TRITON_NATIVE_DECODE=0) so the clean-room
-decoders stay continuously exercised; the parity/differential legs
-opt back in explicitly.
+Routing policy (see parse_image / parse_webp / parse_png / ...): a
+parser tries its native leg whenever that leg's library or shim loaded
+and its accept-set gate passes the input; otherwise — library missing,
+unsupported feature, gate declines, rejected bytes, any native error —
+it runs the pure decoder, which owns the loud corrupt-skip ValueError.
+The gates mirror the pure decoders' accept sets, so both paths accept
+and reject the same files. The pure decoders stay: they are the only
+path for some inputs (colour-managed or palette PNG, VP8X WebP), they
+own the rejection of the rest the gates decline (16-bit PNG, tiled
+TIFF, SOF1 JPEG, ...), and they are the reference the parity tests in
+tests/test_native_fastpath.py compare each native leg against.
 
 Cluster note: ctypes binds per-process, so executors resolve the
 libraries locally; a heterogeneous cluster where some hosts lack a
@@ -56,36 +57,11 @@ from __future__ import annotations
 import ctypes
 import ctypes.util
 import os
+import re
 import struct
 from typing import Optional
 
 import numpy as np
-
-_ENV_FLAG = "TRITON_NATIVE_DECODE"
-
-
-def native_enabled(prefer_native: "bool | None" = None) -> bool:
-    """Resolve the dispatch: an explicit kwarg wins; otherwise the
-    TRITON_NATIVE_DECODE env var (read per call so executors forked
-    after a conf change still honor it).
-
-    Default flipped ON in the r12 optimization round (guide §4.2 "do
-    the heavy lifting in native code"): the suite-level A/B of record
-    (SCALE.md r11) measured flag-on at 0.893x with zero correctness
-    movement, and every native leg degrades per-host to the pure path
-    when a library/shim is absent and per-FILE to the pure path when
-    the accept-set gate declines — semantics stay pinned by the pure
-    decoders' oracle gates either way. Set TRITON_NATIVE_DECODE=0 to
-    force the pure clean-room path everywhere (tests/conftest.py does
-    exactly that, so the test suite keeps exercising the pure
-    decoders by default and enables native only in the explicit
-    parity/differential legs)."""
-    if prefer_native is not None:
-        return bool(prefer_native)
-    raw = os.environ.get(_ENV_FLAG)
-    if raw is None:
-        return True
-    return raw.strip() not in ("0", "false", "no", "")
 
 
 def _try_cdll(*names):
@@ -277,7 +253,7 @@ def _png_chunks_structurally_pure(data: bytes) -> bool:
     away, which the pure path rejects loudly ("truncated PNG chunk
     header"); found by the r12 native-default flip when the
     cross-format dedup gates' truncated corpus rows stopped being
-    skipped. Without this walk the flag silently WIDENS the accept
+    skipped. Without this walk the native leg silently WIDENS the accept
     set on exactly the corrupt-skip contract the operators pin."""
     import zlib as _zlib
 
@@ -298,25 +274,29 @@ def _png_chunks_structurally_pure(data: bytes) -> bool:
 
 
 def decode_png_native(data: bytes) -> Optional[dict]:
-    """8-bit-depth PNGs only: libpng's RGBA read, alpha then DROPPED
-    exactly like parse_png (requesting RGB from libpng would instead
-    COMPOSITE alpha onto a background — different pixels). 16-bit
-    files return None: libpng's 16->8 scaling differs from the pure
-    decoder's documented truncation, so they take the pure path."""
+    """8-bit grayscale, RGB and RGBA PNGs only: libpng's RGBA read,
+    alpha then DROPPED exactly like parse_png (requesting RGB from
+    libpng would instead COMPOSITE alpha onto a background — different
+    pixels). Every other file returns None and takes the pure path:
+    libpng scales 16-bit samples where the pure decoder rejects them,
+    and it expands 1/2/4-bit samples and gray+alpha, which the pure
+    decoder rejects too. Palette files (color type 3) are declined
+    because libpng's simplified API accepts an out-of-range palette
+    index that the PNG spec (PLTE chunk) makes an error."""
     lib = _png()
     if lib is None or len(data) < 26 or data[:8] != b"\x89PNG\r\n\x1a\n":
         return None
     # IHDR is always first: width/height/bit_depth/color_type at 16..
     bit_depth = data[24]
     color_type = data[25]
-    if bit_depth > 8:
+    if bit_depth != 8 or color_type not in (0, 2, 6):
         return None
     if not _png_chunks_structurally_pure(data):
         return None
     if _png_has_color_management(data):
         # gAMA/cHRM/sRGB/iCCP: libpng's simplified API CONVERTS pixel
         # values toward sRGB while parse_png returns the raw samples —
-        # a silent flag-on/off divergence (review find). Pure path.
+        # a silent native/pure divergence (review find). Pure path.
         return None
     img = _PngImage()
     img.version = 1
@@ -414,10 +394,11 @@ def _tiff_pure_compatible(data: bytes) -> bool:
     libtiff decodes compressions (JPEG-in-TIFF, CCITT, …), extra
     configurations (tiles, planar, 16-bit) and APPLIES Orientation —
     all of which the pure decoder either rejects loudly or treats
-    differently. Without this gate TRITON_NATIVE_DECODE=1 silently
+    differently. Without this gate the native leg silently
     widens/changes the accept set (r11 advice; mirrors the PNG
     color-management guard). A False routes to the pure path, which
-    owns the loud rejection."""
+    owns the loud rejection. A missing BitsPerSample means 1 bit
+    (TIFF 6.0 default), as libtiff and parse_tiff both read it."""
     import struct as _struct
 
     from go_triton_spark.codec import tiff as _t
@@ -448,13 +429,16 @@ def _tiff_pure_compatible(data: bytes) -> bool:
         # (possibly associated) alpha; pure ignores it — narrow to
         # exactly 3. Gray/palette must be spp==1 (pure rejects more).
         and (spp == 3 if photo == 2 else spp == 1)
-        and all(b == 8 for b in tags.get(258, (8,) * spp))
+        and all(b == 8 for b in tags.get(258, (1,) * spp))
         and one(317, 1) in (1, 2)
         and one(274, 1) == 1        # pure ignores Orientation entirely
         and one(284, 1) == 1        # chunky only (pure assumes it)
         and one(339, 1) == 1        # unsigned-int samples only
         and one(266, 1) == 1        # FillOrder: MSB-first only
         and 273 in tags and 279 in tags   # strips, not tiles
+        # TIFF 6.0 sizes ColorMap 3 * 2**8; libtiff ignores a shorter
+        # one and returns the raw indices, the pure path expands it
+        and (photo != 3 or len(tags.get(320, ())) == 3 << 8)
     )
     if not ok:
         return False
@@ -491,7 +475,7 @@ def _tiff_pure_compatible(data: bytes) -> bool:
 def decode_tiff_native(data: bytes) -> Optional[dict]:
     """First IFD via TIFFReadRGBAImageOriented (top-left origin, so no
     flip) over an in-memory TIFFClientOpen stream. Gated by
-    _tiff_pure_compatible so the flag never widens the accept set."""
+    _tiff_pure_compatible so it never widens the accept set."""
     lib = _tiff()
     if lib is None or not _tiff_pure_compatible(data):
         return None
@@ -602,7 +586,10 @@ static void shim_emit_message(j_common_ptr cinfo, int msg_level) {
 
 /* Decode to packed 8-bit RGB. Returns 1 on success (caller frees *out
  * with triton_shim_free); 0 on failure with errbuf (>=256) filled.
- * fancy upsampling OFF: chroma replication, matching the pure decoder. */
+ * fancy upsampling OFF: chroma replication, matching the pure decoder.
+ * block smoothing OFF: libjpeg by default interpolates the AC terms of
+ * progressive blocks whose AC scans have not arrived (or carry only
+ * DC); T.81 decodes the coefficients as sent, like the pure decoder. */
 int triton_jpeg_decode_rgb(const unsigned char *data, size_t len,
                            unsigned char **out, int *w, int *h,
                            int *ncomp, int *progressive, int *hv,
@@ -629,8 +616,8 @@ int triton_jpeg_decode_rgb(const unsigned char *data, size_t len,
     jpeg_read_header(&cinfo, TRUE);
     /* parse_jpeg accepts Huffman SOF0/SOF2 only; libjpeg would also
      * decode arithmetic-coded streams, silently widening the accept
-     * set under the flag — reject them here so flag-on row/skip
-     * counts match the pure path (r11 advice; the Python pre-scan in
+     * set — reject them here so native row/skip counts match the
+     * pure path (r11 advice; the Python pre-scan in
      * decode_jpeg_native is the first line, this is defense in depth
      * for callers reaching the shim directly). */
     if (cinfo.arith_code) {
@@ -640,6 +627,7 @@ int triton_jpeg_decode_rgb(const unsigned char *data, size_t len,
     cinfo.out_color_space = cinfo.num_components == 1 ? JCS_GRAYSCALE
                                                       : JCS_RGB;
     cinfo.do_fancy_upsampling = FALSE;
+    cinfo.do_block_smoothing = FALSE;
     *ncomp = cinfo.num_components;
     *progressive = cinfo.progressive_mode;
     *hv = cinfo.num_components > 1
@@ -731,17 +719,26 @@ def _jpeg_shim_lib():
 _SUBSAMPLING = {0x11: "4:4:4", 0x21: "4:2:2", 0x22: "4:2:0"}
 
 
+# the next marker after a scan's entropy-coded data: 0xFF followed by
+# anything but a stuffed zero, a fill byte or a restart marker
+_JPEG_SCAN_END = re.compile(rb"\xff[^\x00\xd0-\xd7\xff]")
+
+
 def _jpeg_pure_compatible(data: bytes) -> bool:
-    """True when the frame type is one parse_jpeg ACCEPTS (Huffman
-    SOF0/SOF2, 8-bit precision). libjpeg also decodes SOF1 (extended
-    sequential) and arithmetic-coded streams — without this pre-scan
-    the flag would silently WIDEN the accept set and flag-on row/skip
-    counts could differ from the pure path on wild inputs (r11
-    advice; same divergence class the PNG color-management guard
-    closes). A False here routes to the pure decoder, which either
-    rejects loudly (the parity case) or — if this conservative scan
-    mis-classified — decodes correctly at pure speed."""
+    """True when the stream is one parse_jpeg ACCEPTS as far as frame
+    type and tables go (Huffman SOF0/SOF2, 8-bit precision, every scan's
+    Huffman tables defined). libjpeg also decodes SOF1 (extended
+    sequential) and arithmetic-coded streams, and it fills a Huffman
+    table no DHT defined with the T.81 Annex K example table — without
+    this pre-scan the native leg would silently WIDEN the accept set
+    and native row/skip counts could differ from the pure path on wild
+    inputs (r11 advice; same divergence class the PNG color-management
+    guard closes). A False here routes to the pure decoder, which
+    either rejects loudly (the parity case) or — if this conservative
+    scan mis-classified — decodes correctly at pure speed."""
     i, n = 2, len(data)
+    frame = False
+    tables = set()                          # (class, id) defined by DHT
     while i + 2 <= n:
         if data[i] != 0xFF:
             return False                   # marker desync: pure classifies
@@ -752,31 +749,57 @@ def _jpeg_pure_compatible(data: bytes) -> bool:
         if m == 0x01 or 0xD0 <= m <= 0xD8:  # TEM / RSTn / SOI: bare
             i += 2
             continue
-        if 0xC0 <= m <= 0xCF and m not in (0xC4, 0xC8, 0xCC):
-            # first SOF marker decides. Mirror parse_jpeg's FULL frame
-            # acceptance (jpeg.py SOF handler): Huffman SOF0/SOF2,
-            # 8-bit precision, 1 or 3 components, sampling factors
-            # 1..2 — libjpeg also decodes 4-component and 3x/4x
-            # sampled streams the pure path loudly rejects
-            if m not in (0xC0, 0xC2) or i + 10 > n or data[i + 4] != 8:
-                return False
-            nc = data[i + 9]
-            if nc not in (1, 3) or i + 10 + 3 * nc > n:
-                return False
-            for ci in range(nc):
-                sf = data[i + 11 + 3 * ci]
-                hi, vi = sf >> 4, sf & 0x0F
-                if not (1 <= hi <= 2 and 1 <= vi <= 2):
-                    return False
-            return True
-        if m in (0xD9, 0xDA):              # EOI/SOS before any SOF
-            return False
+        if m == 0xD9:                      # EOI
+            return frame
         if i + 4 > n:
             return False
         seglen = (data[i + 2] << 8) | data[i + 3]
-        if seglen < 2:
+        if seglen < 2 or i + 2 + seglen > n:
             return False
+        body = data[i + 4:i + 2 + seglen]
         i += 2 + seglen
+        if 0xC0 <= m <= 0xCF and m not in (0xC4, 0xC8, 0xCC):
+            # one SOF only. Mirror parse_jpeg's FULL frame acceptance
+            # (jpeg.py SOF handler): Huffman SOF0/SOF2, 8-bit
+            # precision, 1 or 3 components, sampling factors 1..2 —
+            # libjpeg also decodes 4-component and 3x/4x sampled
+            # streams the pure path loudly rejects
+            if frame or m not in (0xC0, 0xC2) or len(body) < 6 \
+                    or body[0] != 8:
+                return False
+            nc = body[5]
+            if nc not in (1, 3) or len(body) < 6 + 3 * nc:
+                return False
+            for ci in range(nc):
+                sf = body[7 + 3 * ci]
+                hi, vi = sf >> 4, sf & 0x0F
+                if not (1 <= hi <= 2 and 1 <= vi <= 2):
+                    return False
+            frame = True
+        elif m == 0xC4:                    # DHT: record each table
+            j = 0
+            while j + 17 <= len(body):
+                tables.add((body[j] >> 4, body[j] & 0x0F))
+                j += 17 + sum(body[j + 1:j + 17])
+            if j != len(body):
+                return False
+        elif m == 0xDA:                    # SOS: same table rule as
+            if not frame or not body:      # parse_jpeg's SOS handler
+                return False
+            ns = body[0]
+            if len(body) < 4 + 2 * ns:
+                return False
+            ss, se, a = body[1 + 2 * ns:4 + 2 * ns]
+            for si in range(ns):
+                tt = body[2 + 2 * si]
+                if ss == 0 and a >> 4 == 0 and (0, tt >> 4) not in tables:
+                    return False           # first DC scan needs a DC table
+                if se > 0 and (1, tt & 0x0F) not in tables:
+                    return False           # any AC scan needs an AC table
+            end = _JPEG_SCAN_END.search(data, i)
+            if end is None:
+                return False
+            i = end.start()
     return False
 
 
@@ -1278,7 +1301,7 @@ def flac_predicted_native(data: bytes, bitpos: int, blocksize: int,
     Returns ``(samples int64 ndarray, new_bit_position)`` on success,
     None when the shim is absent or the bitstream deviates in ANY way
     — the pure path re-decodes and raises its typed ValueError, so
-    flag-on keeps exact corrupt accept/reject parity."""
+    the native leg keeps exact corrupt accept/reject parity."""
     lib = _crc_shim_lib()
     if lib is None or blocksize <= 0 or blocksize > 1 << 26:
         return None
@@ -1314,60 +1337,29 @@ def gif_lzw_decode_native(data: bytes, min_code_size: int,
 
 # ------------------------------------------------------------ dispatch
 
-_IMAGE_DECODERS = {}
-
-
-def maybe_image(fmt: str, data: bytes,
-                prefer_native: "bool | None" = None) -> Optional[dict]:
-    """Opt-in gate + never-raises wrapper the parsers call first:
-    returns the native decode dict, or None (flag off, library
-    absent, unsupported feature, rejected/corrupt bytes, any native
-    error) — in which case the caller runs its pure path, preserving
-    the loud ValueError contract for genuinely corrupt bytes."""
-    if not native_enabled(prefer_native):
-        return None
-    fn = _IMAGE_DECODERS.get(fmt)
-    if fn is None:
-        return None
-    try:
-        return fn(data)
-    except Exception:
-        return None
-
-
-def decode_image_native(data: bytes) -> Optional[dict]:
-    """Sniff + route to the per-format native decoder. None whenever
-    no native path applies — callers MUST fall back to the pure
-    decoder (which also owns the loud corrupt-skip ValueError)."""
-    if len(data) < 12:
-        return None
-    try:
-        if data[:8] == b"\x89PNG\r\n\x1a\n":
-            return decode_png_native(data)
-        if data[:3] == b"\xff\xd8\xff":
-            return decode_jpeg_native(data)
-        if data[:4] == b"RIFF" and data[8:12] == b"WEBP":
-            return decode_webp_native(data)
-        if data[:4] in (b"II*\x00", b"MM\x00*"):
-            return decode_tiff_native(data)
-    except Exception:
-        return None    # any native hiccup degrades to the pure path
-    return None         # bmp/qoi are already plain numpy; gif: pure
-
-
-_IMAGE_DECODERS.update({
-    "image": decode_image_native,
+_IMAGE_DECODERS = {
     "webp": decode_webp_native,
     "png": decode_png_native,
     "jpeg": decode_jpeg_native,
     "tiff": decode_tiff_native,
-})
+}
+
+
+def maybe_image(fmt: str, data: bytes) -> Optional[dict]:
+    """Never-raises wrapper the parsers call first: returns the native
+    decode dict, or None (library absent, unsupported feature,
+    rejected/corrupt bytes, any native error) — in which case the
+    caller runs its pure path, preserving the loud ValueError contract
+    for genuinely corrupt bytes."""
+    try:
+        return _IMAGE_DECODERS[fmt](data)
+    except Exception:
+        return None
 
 
 def native_status() -> dict:
     """Observability: which native paths this process can use."""
     return {
-        "enabled_by_env": native_enabled(),
         "webp": _webp() is not None,
         "png": _png() is not None,
         "tiff": _tiff() is not None,

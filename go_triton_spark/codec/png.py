@@ -118,7 +118,7 @@ def _walk_chunks(data: bytes):
     raise ValueError("PNG missing IEND chunk")
 
 
-def parse_png(data: bytes, prefer_native: "bool | None" = None) -> dict:
+def parse_png(data: bytes) -> dict:
     """Parse one complete PNG file; return pixels + metadata.
 
     Returns dict with: width, height, bit_depth, color_type, n_pixels,
@@ -127,15 +127,20 @@ def parse_png(data: bytes, prefer_native: "bool | None" = None) -> dict:
     dropped), row 0 = top — the same contract as parse_bmp so the
     mm_image_* math is format-agnostic.
 
-    With ``prefer_native=True`` (or TRITON_NATIVE_DECODE=1), 8-bit
-    files route through the system libpng (codec/native.py) with
-    bit-identical output; misses fall back here.
+    8-bit grayscale/RGB/RGBA files without color management decode
+    through the system libpng (codec/native.py) with bit-identical
+    output; every other file, and any native miss, takes the pure
+    decoder ``_parse_png_pure``.
     """
     from go_triton_spark.codec import native as _native
 
-    m = _native.maybe_image("png", data, prefer_native)
-    if m is not None:
-        return m
+    m = _native.maybe_image("png", data)
+    return m if m is not None else _parse_png_pure(data)
+
+
+def _parse_png_pure(data: bytes) -> dict:
+    """The pure decoder behind parse_png: same contract, and the
+    reference the native parity tests compare against."""
     if len(data) < len(_SIG) or data[:len(_SIG)] != _SIG:
         raise ValueError("not a PNG file (bad signature)")
     width = height = None

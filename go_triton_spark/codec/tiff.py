@@ -239,18 +239,22 @@ def _read_entries(data: bytes, ifd_off: int, bo: str) -> dict:
     return entries
 
 
-def parse_tiff(data: bytes, prefer_native: "bool | None" = None) -> dict:
+def parse_tiff(data: bytes) -> dict:
     """Decode the FIRST image of a TIFF file; returns the shared image
     contract (width/height/n_pixels + (h, w, 3) RGB uint8 pixels).
 
-    With ``prefer_native=True`` (or TRITON_NATIVE_DECODE=1) decode
-    routes through the system libtiff (codec/native.py) with
-    bit-identical output; misses fall back here."""
+    Files inside the pure accept set decode through the system libtiff
+    (codec/native.py) with bit-identical output; every other file, and
+    any native miss, takes the pure decoder ``_parse_tiff_pure``."""
     from go_triton_spark.codec import native as _native
 
-    m = _native.maybe_image("tiff", data, prefer_native)
-    if m is not None:
-        return m
+    m = _native.maybe_image("tiff", data)
+    return m if m is not None else _parse_tiff_pure(data)
+
+
+def _parse_tiff_pure(data: bytes) -> dict:
+    """The pure decoder behind parse_tiff: same contract, and the
+    reference the native parity tests compare against."""
     if len(data) < 8:
         raise ValueError("not a TIFF file (too short)")
     if data[:4] == b"II*\x00":
@@ -281,7 +285,7 @@ def parse_tiff(data: bytes, prefer_native: "bool | None" = None) -> dict:
             "PackBits only; JPEG-in-TIFF is a named swap point)")
     photo = one(262)
     spp = one(277, 1)
-    bits = tags.get(258, (8,) * spp)
+    bits = tags.get(258, (1,) * spp)            # TIFF 6.0 default: 1
     if any(b != 8 for b in bits):
         raise ValueError("unsupported TIFF bit depth (8-bit only)")
     predictor = one(317, 1)

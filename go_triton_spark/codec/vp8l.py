@@ -877,22 +877,26 @@ def _parse_vp8x(data: bytes, body: bytes, after: int, end: int) -> dict:
     return meta
 
 
-def parse_webp(data: bytes, prefer_native: "bool | None" = None) -> dict:
+def parse_webp(data: bytes) -> dict:
     """Parse a WebP file (RIFF container): lossless VP8L decodes via
     this module; lossy VP8 key frames decode via codec/vp8.py (RFC
     6386, bit-exact against libwebp — tests/test_vp8_codec.py); VP8X
     extended containers decode incl. ALPH alpha and ANIM/ANMF
     animation frames.
 
-    With ``prefer_native=True`` (or TRITON_NATIVE_DECODE=1) bare
-    VP8/VP8L containers route through the system libwebp (codec/
-    native.py) — bit-identical output, ~2-3 orders of magnitude
-    faster on large frames; any native miss falls back here."""
+    Bare VP8/VP8L containers decode through the system libwebp
+    (codec/native.py) — bit-identical output, ~2-3 orders of
+    magnitude faster on large frames; VP8X containers, and any native
+    miss, take the pure decoder ``_parse_webp_pure``."""
     from go_triton_spark.codec import native as _native
 
-    m = _native.maybe_image("webp", data, prefer_native)
-    if m is not None:
-        return m
+    m = _native.maybe_image("webp", data)
+    return m if m is not None else _parse_webp_pure(data)
+
+
+def _parse_webp_pure(data: bytes) -> dict:
+    """The pure decoder behind parse_webp: same contract, and the
+    reference the native parity tests compare against."""
     if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"WEBP":
         raise ValueError("not a WebP file (bad RIFF header)")
     (riff_size,) = struct.unpack_from("<I", data, 4)

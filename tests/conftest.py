@@ -5,15 +5,10 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# The engine's production default is native-decode ON (r12 optimization;
-# codec/native.py). The test suite pins the PURE clean-room path as its
-# default so the image and audio codec/operator tests keep exercising the
-# spec-first decoders; the native parity/differential legs opt back in
-# explicitly with monkeypatch.setenv / prefer_native=True. The flag does
-# not reach zstd/lz4/xz decompression, which has one path
-# (codec/compressed.py). setdefault so an operator can still run the
-# whole suite native-first by exporting the flag.
-os.environ.setdefault("TRITON_NATIVE_DECODE", "0")
+# The image and audio tests run the decode routing that ships
+# (codec/native.py): each native leg where its library or shim loaded
+# and its gate accepts the input, the pure decoder otherwise. Tests that
+# pin pure-decoder semantics call the pure functions directly.
 
 SF_SMOKE = "/root/testdata/sf0.001"
 

@@ -1,8 +1,11 @@
 """Native fast-path equality suite (codec/native.py, r9 verdict #2).
 
-The opt-in system-library decode path must be INVISIBLE except for
-speed: bit-identical output for WebP (lossy via WebPDecodeYUV + the
-engine's own yuv_to_rgb; lossless via WebPDecodeRGBA), PNG and TIFF.
+The system-library decode path must be INVISIBLE except for speed:
+each native leg is compared directly with the pure decoder it stands
+in for — bit-identical output for WebP (lossy via WebPDecodeYUV + the
+engine's own yuv_to_rgb; lossless via WebPDecodeRGBA), PNG and TIFF,
+and whole-file parity for the compiled-shim legs (GIF LZW, QOI, FLAC,
+IMA ADPCM, CRC32C) against a run with the shim absent.
 zstd/lz4/xz decompression has only the system-library path
 (codec/compressed.py); its section below pins that path on the same
 payload corpus and corrupt inputs. JPEG is the documented
@@ -10,8 +13,10 @@ exception — ITU-T T.81 leaves IDCT precision implementation-defined,
 so the pure float-IDCT decoder and libjpeg's islow integer IDCT
 legitimately differ; the bound here (+-2 per channel, metadata exact)
 is measured and pinned. Corrupt bytes must raise the SAME loud
-ValueError with the flag on (native rejection falls back to the pure
-decoder, which owns the verdict).
+ValueError through the shipped parsers (native rejection falls back
+to the pure decoder, which owns the verdict), and files a system
+library reads differently from the spec must get the same outcome on
+both paths.
 
 Each test skips when its system library is absent, so the suite stays
 green on a minimal container while pinning the contract wherever the
@@ -20,20 +25,25 @@ fast path can actually engage.
 
 from __future__ import annotations
 
+import contextlib
 import lzma
+import struct
+import zlib
 
 import numpy as np
 import pytest
 
 from go_triton_spark.codec import native
 from go_triton_spark.codec.compressed import DecompressError, decompress
-from go_triton_spark.codec.image import parse_image
-from go_triton_spark.codec.jpeg import build_jpeg_ycbcr, parse_jpeg
+from go_triton_spark.codec.jpeg import _parse_jpeg_pure, build_jpeg, \
+    build_jpeg_ycbcr, parse_jpeg
 from go_triton_spark.codec.lz4 import frame_compress
-from go_triton_spark.codec.png import build_png, parse_png
-from go_triton_spark.codec.tiff import build_tiff, parse_tiff
-from go_triton_spark.codec.vp8l import build_webp, build_webp_anim, \
-    parse_webp
+from go_triton_spark.codec.png import _chunk, _parse_png_pure, build_png, \
+    parse_png
+from go_triton_spark.codec.tiff import _parse_tiff_pure, build_tiff, \
+    parse_tiff
+from go_triton_spark.codec.vp8l import _parse_webp_pure, build_webp, \
+    build_webp_anim, parse_webp
 
 _ST = native.native_status()
 
@@ -65,6 +75,22 @@ def _same_dict(a: dict, b: dict) -> None:
             assert va == vb, (k, va, vb)
 
 
+def _native_equals_pure(decode_native, parse_pure, data: bytes) -> None:
+    got = decode_native(data)
+    assert got is not None, "native leg declined the input"
+    _same_dict(parse_pure(data), got)
+
+
+@contextlib.contextmanager
+def _shim_absent():
+    """Decode as on a host where the compiled shim did not load: every
+    shim leg (GIF LZW, QOI, IMA, CRC32C, FLAC) declines and the pure
+    code runs."""
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(native, "_crc_shim_lib", lambda: None)
+        yield
+
+
 # ------------------------------------------------------------- webp
 
 @_webp
@@ -79,7 +105,8 @@ def test_webp_lossless_bit_identical(transform):
         else:
             img = _img(("noise", "grad")[trial % 2], h, w, seed=trial)
         data = build_webp(img, transform=transform)
-        _same_dict(parse_webp(data), parse_webp(data, prefer_native=True))
+        _native_equals_pure(native.decode_webp_native, _parse_webp_pure,
+                            data)
 
 
 @_webp
@@ -88,7 +115,7 @@ def test_webp_lossless_alpha_bit_identical():
     img = _img("grad", 22, 18)
     alpha = rng.integers(0, 256, (22, 18), dtype=np.uint8)
     data = build_webp(img, alpha=alpha)
-    _same_dict(parse_webp(data), parse_webp(data, prefer_native=True))
+    _native_equals_pure(native.decode_webp_native, _parse_webp_pure, data)
 
 
 @_webp
@@ -102,17 +129,19 @@ def test_webp_lossy_bit_identical():
                                        (64, 48, 85), (5, 3, 50))):
         img = _img(("noise", "grad", "flat")[trial % 3], h, w, seed=trial)
         data = _encode_simple(img, float(q))
-        _same_dict(parse_webp(data), parse_webp(data, prefer_native=True))
+        _native_equals_pure(native.decode_webp_native, _parse_webp_pure,
+                            data)
 
 
 @_webp
 def test_webp_vp8x_falls_back_to_pure():
     """Extended containers (here: animation) have no native path —
-    the flag must not change their output."""
+    parse_webp decodes them with the pure decoder."""
     base = np.full((8, 8, 3), 50, np.uint8)
     data = build_webp_anim([dict(rgb=base, no_blend=True)], 8, 8)
-    a = parse_webp(data)
-    b = parse_webp(data, prefer_native=True)
+    assert native.decode_webp_native(data) is None
+    a = _parse_webp_pure(data)
+    b = parse_webp(data)
     assert a["n_frames"] == b["n_frames"] == 1
     assert np.array_equal(a["pixels"], b["pixels"])
 
@@ -125,9 +154,9 @@ def test_webp_corrupt_still_raises_with_flag_on():
     img = _img("grad", 12, 12)
     data = build_webp(img)
     with pytest.raises(ValueError):
-        parse_webp(data[:-6], prefer_native=True)
+        parse_webp(data[:-6])
     with pytest.raises(ValueError):
-        parse_webp(b"RIFF\x04\x00\x00\x00WEBP", prefer_native=True)
+        parse_webp(b"RIFF\x04\x00\x00\x00WEBP")
 
 
 # -------------------------------------------------------------- png
@@ -138,7 +167,7 @@ def test_png_bit_identical(interlace):
     for trial, (h, w) in enumerate(((1, 1), (9, 40), (40, 9), (32, 32))):
         img = _img(("noise", "grad")[trial % 2], h, w, seed=trial)
         data = build_png(img, interlace=interlace)
-        _same_dict(parse_png(data), parse_png(data, prefer_native=True))
+        _native_equals_pure(native.decode_png_native, _parse_png_pure, data)
 
 
 @_png
@@ -146,7 +175,7 @@ def test_png_corrupt_still_raises_with_flag_on():
     data = bytearray(build_png(_img("grad", 10, 10)))
     data[40] ^= 0xFF  # inside IHDR/IDAT region: CRC breaks
     with pytest.raises(ValueError):
-        parse_png(bytes(data), prefer_native=True)
+        parse_png(bytes(data))
 
 
 @_png
@@ -157,14 +186,14 @@ def test_png_truncated_iend_rejected_with_flag_on(cut):
     WIDENING the accept set vs parse_png's loud 'truncated PNG chunk
     header' — exactly the corrupt-skip shape the cross-format dedup
     gates synthesize (last 9/11 bytes cut). The structural pre-walk
-    must route these to the pure path so flag-on == flag-off accept."""
+    must route these to the pure path so native and pure accept alike."""
     data = build_png(_img("grad", 12, 7))
+    assert native.decode_png_native(data[:-cut]) is None
     with pytest.raises(ValueError):
-        parse_png(data[:-cut], prefer_native=True)
+        parse_png(data[:-cut])
     # and the walk must NOT reject the intact file (native still used)
-    from go_triton_spark.codec import native as _n
-    assert _n._png_chunks_structurally_pure(data)
-    m = parse_png(data, prefer_native=True)
+    assert native._png_chunks_structurally_pure(data)
+    m = native.decode_png_native(data)
     assert m["width"] == 7 and m["height"] == 12
 
 
@@ -177,14 +206,14 @@ def test_tiff_bit_identical(comp, big_endian):
     img = _img("noise", 29, 41, seed=7)
     data = build_tiff(img, compression=comp, big_endian=big_endian,
                       predictor=(comp == "lzw"))
-    _same_dict(parse_tiff(data), parse_tiff(data, prefer_native=True))
+    _native_equals_pure(native.decode_tiff_native, _parse_tiff_pure, data)
 
 
 @_tiff
 def test_tiff_corrupt_still_raises_with_flag_on():
     data = build_tiff(_img("grad", 8, 8))
     with pytest.raises(ValueError):
-        parse_tiff(data[:30], prefer_native=True)
+        parse_tiff(data[:30])
 
 
 # ------------------------------------------------------------- jpeg
@@ -205,8 +234,8 @@ def test_jpeg_within_bound_and_metadata_exact(sub, progressive):
     cr = rng.integers(0, 256, (h, w)).astype(np.uint8)
     data = build_jpeg_ycbcr(y, cb, cr, subsampling=sub,
                             progressive=progressive)
-    a = parse_jpeg(data)
-    b = parse_jpeg(data, prefer_native=True)
+    a = _parse_jpeg_pure(data)
+    b = native.decode_jpeg_native(data)
     for k in ("width", "height", "n_pixels", "n_components",
               "progressive", "subsampling"):
         assert a[k] == b[k], k
@@ -219,13 +248,13 @@ def test_jpeg_grayscale_and_corrupt():
     y = (np.add.outer(np.arange(24) * 7, np.arange(24) * 3) % 256) \
         .astype(np.uint8)
     data = build_jpeg_ycbcr(y, None, None, subsampling="4:4:4")
-    a = parse_jpeg(data)
-    b = parse_jpeg(data, prefer_native=True)
+    a = _parse_jpeg_pure(data)
+    b = native.decode_jpeg_native(data)
     assert a["n_components"] == b["n_components"] == 1
     assert np.abs(a["pixels"].astype(int)
                   - b["pixels"].astype(int)).max() <= 2
     with pytest.raises(ValueError):
-        parse_jpeg(data[:40], prefer_native=True)
+        parse_jpeg(data[:40])
 
 
 # ----------------------------------------------- zstd / lz4 / xz
@@ -281,57 +310,11 @@ def test_xz_corrupt_falls_back_to_typed_error():
         decompress("xz", bytes(comp))
 
 
-# ------------------------------------------------------- dispatch
-
-@_webp
-@_png
-@_tiff
-def test_parse_image_dispatch_with_env_flag(monkeypatch):
-    """The env opt-in engages per-call (executors read it at decode
-    time) and the dispatch output stays identical across formats."""
-    monkeypatch.setenv("TRITON_NATIVE_DECODE", "1")
-    assert native.native_enabled()
-    img = _img("grad", 21, 13)
-    for data in (build_png(img), build_webp(img), build_tiff(img)):
-        m = parse_image(data)
-        assert np.array_equal(m["pixels"], img)
-    monkeypatch.setenv("TRITON_NATIVE_DECODE", "0")
-    assert not native.native_enabled()
-
-
-def test_flag_off_never_touches_native(monkeypatch):
-    """With the flag explicitly off (the pure clean-room
-    configuration the test suite pins in conftest.py), maybe_image
-    must not even attempt a native decode."""
-    monkeypatch.setenv("TRITON_NATIVE_DECODE", "0")
-    calls = []
-    monkeypatch.setitem(native._IMAGE_DECODERS, "png",
-                        lambda d: calls.append(1))
-    assert native.maybe_image("png", b"\x89PNG\r\n\x1a\n") is None
-    assert not calls
-
-
-def test_flag_defaults_on_when_unset(monkeypatch):
-    """r12: the production default is native ON — an unset env means
-    enabled, and only an explicit falsy token ('0'/'false'/'no'/empty)
-    forces the pure path. The kwarg still wins over the env in both
-    directions."""
-    monkeypatch.delenv("TRITON_NATIVE_DECODE", raising=False)
-    assert native.native_enabled()
-    assert not native.native_enabled(prefer_native=False)
-    for tok in ("0", "false", "no", "", "  0  "):
-        monkeypatch.setenv("TRITON_NATIVE_DECODE", tok)
-        assert not native.native_enabled(), repr(tok)
-        assert native.native_enabled(prefer_native=True), repr(tok)
-    for tok in ("1", "true", "yes"):
-        monkeypatch.setenv("TRITON_NATIVE_DECODE", tok)
-        assert native.native_enabled(), repr(tok)
-
+# ---------------------------------------------------------- status
 
 def test_native_status_shape():
     st = native.native_status()
-    assert set(st) == {"enabled_by_env", "webp", "png", "tiff",
-                       "jpeg_shim", "crc32c_shim"}
+    assert set(st) == {"webp", "png", "tiff", "jpeg_shim", "crc32c_shim"}
 
 
 # ------------------------------------------------------------ crc32c
@@ -357,22 +340,21 @@ def test_crc32c_shim_bit_identical():
 
 
 @_crc
-def test_tri_snappy_framing_native_crc_equal(monkeypatch):
+def test_tri_snappy_framing_native_crc_equal():
     """frame_decompress output (and its loud checksum rejection) is
-    identical with the native CRC engaged."""
+    identical with the native CRC and with the pure one."""
     from go_triton_spark.codec.snappy_codec import SnappyError, \
         frame_compress, frame_decompress
 
     raw = b'{"doc": 1, "text": "quick brown fox"}\n' * 5000
     fr = frame_compress(raw)
-    monkeypatch.setenv("TRITON_NATIVE_DECODE", "1")
-    assert frame_decompress(fr) == raw
     bad = bytearray(fr)
     bad[-10] ^= 0xFF                       # flip inside the last chunk
-    with pytest.raises(SnappyError):
-        frame_decompress(bytes(bad))
-    monkeypatch.delenv("TRITON_NATIVE_DECODE")
-    assert frame_decompress(fr) == raw
+    for ctx in (contextlib.nullcontext(), _shim_absent()):
+        with ctx:
+            assert frame_decompress(fr) == raw
+            with pytest.raises(SnappyError):
+                frame_decompress(bytes(bad))
 
 
 def test_lz4_concatenated_frames_agree_across_paths():
@@ -409,10 +391,12 @@ def test_fuzz_image_native_equality(h, w, seed):
     arbitrary content/dimensions, not just the fixture shapes."""
     rng = np.random.default_rng(seed)
     img = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
-    for data, parse in ((build_png(img), parse_png),
-                        (build_webp(img), parse_webp),
-                        (build_tiff(img, compression="lzw"), parse_tiff)):
-        _same_dict(parse(data), parse(data, prefer_native=True))
+    for data, decode, parse in (
+            (build_png(img), native.decode_png_native, _parse_png_pure),
+            (build_webp(img), native.decode_webp_native, _parse_webp_pure),
+            (build_tiff(img, compression="lzw"), native.decode_tiff_native,
+             _parse_tiff_pure)):
+        _native_equals_pure(decode, parse, data)
 
 
 @given(st.binary(max_size=5000), st.integers(0, 3))
@@ -460,16 +444,18 @@ def test_gif_native_lzw_bit_identical():
                (np.add.outer(np.arange(h), np.arange(w)) % ncol)
                .astype(np.uint8))
         g = build_gif(idx, pal, interlace=bool(trial % 3 == 0))
-        a = parse_gif(g)
-        b = parse_gif(g, prefer_native=True)
+        with _shim_absent():
+            a = parse_gif(g)
+        b = parse_gif(g)
         for k in ("pixels", "alpha"):
             assert np.array_equal(a[k], b[k]), (trial, k)
     # table growth through every width up to 4096 entries
     big = (np.arange(200 * 300) % 251).astype(np.uint8).reshape(200, 300)
     pal = rng.integers(0, 256, (256, 3), dtype=np.uint8)
     g = build_gif(big, pal)
-    assert np.array_equal(parse_gif(g)["pixels"],
-                          parse_gif(g, prefer_native=True)["pixels"])
+    with _shim_absent():
+        a = parse_gif(g)
+    assert np.array_equal(a["pixels"], parse_gif(g)["pixels"])
 
 
 @_gifshim
@@ -487,14 +473,13 @@ def test_fuzz_gif_lzw_native_equality(raw, mcs):
 
 
 @_gifshim
-def test_gif_corrupt_still_raises_with_flag_on(monkeypatch):
+def test_gif_corrupt_still_raises_with_flag_on():
     from go_triton_spark.codec.gif import build_gif, parse_gif
 
     rng = np.random.default_rng(2)
     pal = rng.integers(0, 256, (16, 3), dtype=np.uint8)
     idx = rng.integers(0, 16, (20, 20)).astype(np.uint8)
     g = build_gif(idx, pal)
-    monkeypatch.setenv("TRITON_NATIVE_DECODE", "1")
     with pytest.raises(ValueError):
         parse_gif(g[:-8])              # truncated LZW/trailer
 
@@ -515,49 +500,42 @@ def test_lz4_truncated_frame_native_parity():
 def test_png_color_management_falls_back_to_pure():
     """A gAMA chunk makes libpng's simplified API CONVERT samples
     toward sRGB; the pure parser returns raw samples — the native
-    path must decline such files so flag on/off stays identical
-    (review find)."""
-    import struct as _s
-    import zlib
-
+    path must decline such files so both paths agree (review
+    find)."""
     base = build_png(_img("grad", 12, 9))
-    gama = _s.pack(">I", 45455)
-    chunk = _s.pack(">I", 4) + b"gAMA" + gama \
-        + _s.pack(">I", zlib.crc32(b"gAMA" + gama) & 0xFFFFFFFF)
     # insert right after IHDR (8-byte sig + 25-byte IHDR chunk)
-    data = base[:33] + chunk + base[33:]
+    data = base[:33] + _chunk(b"gAMA", struct.pack(">I", 45455)) + base[33:]
     assert native._png_has_color_management(data)
     assert native.decode_png_native(data) is None
-    a = parse_png(data)
-    b = parse_png(data, prefer_native=True)
-    assert np.array_equal(a["pixels"], b["pixels"])
+    assert np.array_equal(parse_png(data)["pixels"],
+                          _parse_png_pure(data)["pixels"])
 
 
 # ------------------------------------- accept-set parity guards (r11)
 #
-# The flag must never WIDEN the accept set: libtiff/libjpeg decode
-# configurations the pure decoders loudly reject (orientation, tiles,
-# planar, JPEG-in-TIFF, SOF1, arithmetic coding), so flag-on row/skip
-# counts could diverge on wild inputs without these gates — the same
-# divergence class the PNG color-management guard closes.
+# The native legs must never WIDEN the accept set: libtiff/libjpeg
+# decode configurations the pure decoders loudly reject (orientation,
+# tiles, planar, JPEG-in-TIFF, SOF1, arithmetic coding), so native
+# row/skip counts could diverge on wild inputs without these gates —
+# the same divergence class the PNG color-management guard closes.
 
-def _mini_tiff(extra_tags=()):
-    """Header + one IFD with the baseline tag set (no pixel data —
-    the gate reads only the IFD)."""
-    import struct as s
+def _mini_tiff(extra_tags=(), drop=(), tail=b""):
+    """Header + one IFD with the baseline tag set for a 4x4 gray
+    image, then ``tail``. Without a tail the strip points into the IFD
+    (the gate reads only the IFD)."""
     base = [(256, 3, 1, 4), (257, 3, 1, 4), (258, 3, 1, 8),
             (259, 3, 1, 1), (262, 3, 1, 1), (273, 4, 1, 8),
             (277, 3, 1, 1), (279, 4, 1, 16)]
-    tags = {t[0]: t for t in base}
+    tags = {t[0]: t for t in base if t[0] not in drop}
     for t in extra_tags:
         tags[t[0]] = t
     entries = sorted(tags.values())
-    out = s.pack("<4sI", b"II*\x00", 8)
-    out += s.pack("<H", len(entries))
+    out = struct.pack("<4sI", b"II*\x00", 8)
+    out += struct.pack("<H", len(entries))
     for tag, typ, cnt, val in entries:
-        out += s.pack("<HHII", tag, typ, cnt, val)
-    out += s.pack("<I", 0)
-    return out
+        out += struct.pack("<HHII", tag, typ, cnt, val)
+    out += struct.pack("<I", 0)
+    return out + tail
 
 
 def test_tiff_gate_accepts_pure_set_only():
@@ -590,19 +568,18 @@ def test_tiff_gate_accepts_pure_set_only():
         "too few strips"
     assert not gate(_mini_tiff([(278, 3, 1, 0)])), "rows_per_strip 0"
     # tiled (no strip offsets): drop tag 273
-    import struct as s
     tiled = _mini_tiff()
     assert not gate(tiled.replace(
-        s.pack("<HHII", 273, 4, 1, 8), s.pack("<HHII", 322, 3, 1, 16)))
+        struct.pack("<HHII", 273, 4, 1, 8),
+        struct.pack("<HHII", 322, 3, 1, 16)))
     assert not gate(b"II*\x00")                        # truncated
 
 
 def _sof_stream(sof_marker, precision=8, comps=((1, 0x11, 0),)):
-    import struct as s
     cbytes = b"".join(bytes(c) for c in comps)
     seg = (bytes([0xFF, sof_marker])
-           + s.pack(">H", 2 + 6 + len(cbytes)) + bytes([precision])
-           + s.pack(">HH", 4, 4) + bytes([len(comps)]) + cbytes)
+           + struct.pack(">H", 2 + 6 + len(cbytes)) + bytes([precision])
+           + struct.pack(">HH", 4, 4) + bytes([len(comps)]) + cbytes)
     return (b"\xff\xd8" + b"\xff\xe0" + b"\x00\x04\x00\x00"  # APP0
             + seg + b"\xff\xd9")
 
@@ -628,7 +605,6 @@ def test_jpeg_gate_accepts_pure_set_only():
     assert gate(_sof_stream(0xC0, comps=((1, 0x22, 0), (2, 0x11, 0),
                                          (3, 0x11, 0)))), "4:2:0 ok"
     # real encoder output (baseline + progressive) passes the gate
-    from go_triton_spark.codec.jpeg import build_jpeg
     assert gate(build_jpeg(_img("grad", 16, 16)))
     assert gate(build_jpeg(_img("grad", 16, 16), progressive=True))
 
@@ -647,41 +623,10 @@ def test_jpeg_native_declines_what_pure_rejects():
     # loud rejection) even though libjpeg could decode some of these
     assert native.decode_jpeg_native(_sof_stream(0xC1)) is None
     with pytest.raises(ValueError):
-        parse_jpeg(_sof_stream(0xC1), prefer_native=True)
+        parse_jpeg(_sof_stream(0xC1))
 
 
 # ------------------------------------------------------- flac (r11)
-
-import contextlib
-import os as _os
-
-
-@contextlib.contextmanager
-def _flag_on():
-    prev = _os.environ.get("TRITON_NATIVE_DECODE")
-    _os.environ["TRITON_NATIVE_DECODE"] = "1"
-    try:
-        yield
-    finally:
-        if prev is None:
-            _os.environ.pop("TRITON_NATIVE_DECODE", None)
-        else:
-            _os.environ["TRITON_NATIVE_DECODE"] = prev
-
-
-@contextlib.contextmanager
-def _flag_off():
-    # explicit "0", not delenv: since r12 an UNSET env defaults ON
-    prev = _os.environ.get("TRITON_NATIVE_DECODE")
-    _os.environ["TRITON_NATIVE_DECODE"] = "0"
-    try:
-        yield
-    finally:
-        if prev is None:
-            _os.environ.pop("TRITON_NATIVE_DECODE", None)
-        else:
-            _os.environ["TRITON_NATIVE_DECODE"] = prev
-
 
 _flacsh = pytest.mark.skipif(not _ST.get("crc32c_shim"),
                              reason="compiled shim unavailable (no gcc?)")
@@ -696,9 +641,9 @@ def test_flac_bit_identical(sub):
     s = (np.full((4099, 2), 7, np.int32) if sub == "constant" else
          rng.integers(-2000, 2000, (4099, 2)).astype(np.int32))
     data = build_flac(s, subframe=sub)
-    pure = parse_flac(data)
-    with _flag_on():
-        nat = parse_flac(data)
+    with _shim_absent():
+        pure = parse_flac(data)
+    nat = parse_flac(data)
     assert np.array_equal(pure["samples"], nat["samples"])
     for k in ("sample_rate", "n_channels", "bits_per_sample",
               "n_samples"):
@@ -714,8 +659,7 @@ def test_flac_corrupt_parity_and_crc16_twin():
         subframe="lpc2")
     for cut in (40, len(data) // 2, len(data) - 2):
         errs = []
-        for on in (False, True):
-            ctx = _flag_on() if on else _flag_off()
+        for ctx in (_shim_absent(), contextlib.nullcontext()):
             with ctx:
                 try:
                     fl.parse_flac(data[:cut])
@@ -734,8 +678,9 @@ def test_flac_corrupt_parity_and_crc16_twin():
 
 @_flacsh
 def test_flac_bitflip_fuzz_parity():
-    """Random single-byte corruptions: flag-on and flag-off must agree
-    on accept/reject AND on the decoded samples when both accept."""
+    """Random single-byte corruptions: the shim and the pure path must
+    agree on accept/reject AND on the decoded samples when both
+    accept."""
     from go_triton_spark.codec.flac import build_flac, parse_flac
     rng = np.random.default_rng(3)
     base = build_flac(rng.integers(-800, 800, (2048, 2)).astype(np.int32),
@@ -745,8 +690,7 @@ def test_flac_bitflip_fuzz_parity():
         i = int(rng.integers(42, len(b)))   # past fLaC+STREAMINFO magic
         b[i] ^= int(rng.integers(1, 256))
         outcomes = []
-        for on in (False, True):
-            ctx = _flag_on() if on else _flag_off()
+        for ctx in (_shim_absent(), contextlib.nullcontext()):
             with ctx:
                 try:
                     outcomes.append(parse_flac(bytes(b))["samples"])
@@ -769,14 +713,13 @@ def test_ima_adpcm_bit_identical_and_fuzz():
         nib = rng.integers(0, 16, n, dtype=np.uint8)
         pred = int(rng.integers(-32768, 32768))
         idx = int(rng.integers(0, 89))
-        pure = decode_ima(nib, pred, idx)
+        with _shim_absent():
+            pure = decode_ima(nib, pred, idx)
         got = native.ima_decode_native(nib, pred, idx)
         assert got is not None and np.array_equal(pure, got), trial
-        with _flag_on():
-            flagged = decode_ima(nib, pred, idx)
-        assert np.array_equal(pure, flagged), trial
-    # out-of-range index: native declines, pure (and flag-on via the
-    # block parser) still raises its typed error
+        assert np.array_equal(pure, decode_ima(nib, pred, idx)), trial
+    # out-of-range index: native declines, the block parser still
+    # raises its typed error
     assert native.ima_decode_native(np.zeros(4, np.uint8), 0, 89) is None
 
 
@@ -790,21 +733,20 @@ def test_qoi_bit_identical_and_corrupt_parity():
                        ("flat", 8, 64), ("noise", 1, 1)):
         img = _img(kind, h, w, seed=h)
         data = build_qoi(img)
-        pure = parse_qoi(data)
-        with _flag_on():
-            nat = parse_qoi(data)
-        _same_dict(pure, nat)
+        with _shim_absent():
+            pure = parse_qoi(data)
+        _same_dict(pure, parse_qoi(data))
     # palette-ish content exercises INDEX/RUN ops heavily
     pal = rng.integers(0, 256, (4, 3), dtype=np.uint8)
     img = pal[rng.integers(0, 4, (33, 29))]
     data = build_qoi(img)
-    with _flag_on():
-        _same_dict(parse_qoi(data), parse_qoi(data))
+    with _shim_absent():
+        pure = parse_qoi(data)
+    _same_dict(pure, parse_qoi(data))
     # corruption: truncation + byte flips must raise identically
     for cut in (20, len(data) // 2, len(data) - 9):
         errs = []
-        for on in (False, True):
-            ctx = _flag_on() if on else _flag_off()
+        for ctx in (_shim_absent(), contextlib.nullcontext()):
             with ctx:
                 try:
                     parse_qoi(data[:cut] + data[-8:])  # keep end marker
@@ -824,8 +766,7 @@ def test_qoi_bitflip_fuzz_parity():
         i = int(rng.integers(14, len(buf) - 8))
         buf[i] ^= int(rng.integers(1, 256))
         outcomes = []
-        for on in (False, True):
-            ctx = _flag_on() if on else _flag_off()
+        for ctx in (_shim_absent(), contextlib.nullcontext()):
             with ctx:
                 try:
                     outcomes.append(parse_qoi(bytes(buf))["pixels"])
@@ -838,9 +779,8 @@ def test_qoi_bitflip_fuzz_parity():
 
 
 @_flacsh
-def test_qoi_prefer_native_kwarg_wins_over_env(monkeypatch):
-    """Explicit kwarg beats the env flag for QOI like every other
-    image decoder (r11 review find: it was hardcoded env-only)."""
+def test_parse_image_routes_qoi_through_shim(monkeypatch):
+    """parse_image reaches the QOI shim leg."""
     from go_triton_spark.codec.image import parse_image
     from go_triton_spark.codec.qoi import build_qoi
 
@@ -848,13 +788,114 @@ def test_qoi_prefer_native_kwarg_wins_over_env(monkeypatch):
     orig = native.qoi_decode_native
     monkeypatch.setattr(native, "qoi_decode_native",
                         lambda *a: (calls.append(1), orig(*a))[1])
-    data = build_qoi(np.zeros((4, 4, 3), np.uint8))
-    monkeypatch.setenv("TRITON_NATIVE_DECODE", "1")
-    parse_image(data, prefer_native=False)
-    assert not calls, "explicit opt-out must bypass the native path"
-    parse_image(data, prefer_native=True)
+    parse_image(build_qoi(np.zeros((4, 4, 3), np.uint8)))
     assert calls
-    monkeypatch.setenv("TRITON_NATIVE_DECODE", "0")
-    calls.clear()
-    parse_image(data)
-    assert not calls, "env 0, no kwarg -> pure path"
+
+
+# ------------------------------- where a library departs from the spec
+#
+# Each file below is one a system library reads differently from the
+# spec the pure decoder follows. The shipped parser must get the same
+# outcome as the pure one: the same pixels, or both reject.
+
+def _outcome(parse, data: bytes):
+    try:
+        return parse(data)["pixels"]
+    except ValueError:
+        return None
+
+
+def _png_file(color_type, bit_depth, scanlines, extra=b""):
+    return (b"\x89PNG\r\n\x1a\n"
+            + _chunk(b"IHDR", struct.pack(">IIBBBBB", 2, 2, bit_depth,
+                                          color_type, 0, 0, 0))
+            + extra + _chunk(b"IDAT", zlib.compress(b"".join(scanlines)))
+            + _chunk(b"IEND", b""))
+
+
+_PLTE = _chunk(b"PLTE", bytes([255, 0, 0, 0, 255, 0, 0, 0, 255]))
+
+
+@_png
+@pytest.mark.parametrize("data", [
+    # PLTE: an index past the palette is an error; libpng's simplified
+    # API reads it anyway
+    _png_file(3, 8, [b"\x00\x00\x05", b"\x00\x01\x02"], _PLTE),
+    _png_file(3, 8, [b"\x00\x00\x01", b"\x00\x02\x00"], _PLTE),
+    # 4-bit gray and 8-bit gray+alpha: libpng expands them, the pure
+    # decoder's accept set has neither
+    _png_file(0, 4, [b"\x00\x1f", b"\x00\xf1"]),
+    _png_file(4, 8, [b"\x00\x10\xff\x20\x80", b"\x00\x30\x00\x40\x01"]),
+], ids=["palette-oob", "palette-ok", "gray-4bit", "gray-alpha"])
+def test_png_outside_native_set_same_outcome(data):
+    want = _outcome(_parse_png_pure, data)
+    got = _outcome(parse_png, data)
+    assert (got is None) == (want is None)
+    if want is not None:
+        assert np.array_equal(got, want)
+
+
+@_jpeg
+def test_jpeg_dc_only_progressive_not_smoothed():
+    """libjpeg by default smooths progressive blocks whose AC scans
+    never arrive; T.81 decodes the coefficients as sent (all AC zero),
+    so each 8x8 block is flat — as the pure decoder returns it."""
+    data = build_jpeg(_img("grad", 24, 32), "4:4:4", progressive=True)
+    second_scan = data.index(b"\xff\xda", data.index(b"\xff\xda") + 2)
+    data = data[:second_scan] + b"\xff\xd9"          # DC scan only
+    a = _parse_jpeg_pure(data)["pixels"].astype(int)
+    b = parse_jpeg(data)["pixels"].astype(int)
+    assert np.abs(a - b).max() <= 2
+
+
+def _drop_segment(data: bytes, k: int) -> bytes:
+    """Remove the k-th DHT segment."""
+    at = -1
+    for _ in range(k + 1):
+        at = data.index(b"\xff\xc4", at + 1)
+    (seglen,) = struct.unpack_from(">H", data, at + 2)
+    return data[:at] + data[at + 2 + seglen:]
+
+
+@_jpeg
+@pytest.mark.parametrize("k", [0, 1], ids=["dc-luma", "ac-luma"])
+def test_jpeg_undefined_huffman_table_rejected(k):
+    """A baseline scan naming a Huffman table no DHT defined: libjpeg
+    fills in the T.81 Annex K example table, the pure decoder rejects
+    the scan."""
+    data = _drop_segment(build_jpeg(_img("grad", 16, 16), "4:4:4"), k)
+    assert _outcome(_parse_jpeg_pure, data) is None
+    assert _outcome(parse_jpeg, data) is None
+
+
+@_tiff
+def test_tiff_bits_per_sample_defaults_to_one():
+    """TIFF 6.0: a missing BitsPerSample means 1 bit per sample, as
+    libtiff reads it; the pure decoder has no 1-bit path, so both
+    reject. The same file with BitsPerSample=8 decodes alike."""
+    px = bytes(range(0, 256, 16))
+    data = _mini_tiff([(273, 4, 1, 8 + 2 + 12 * 7 + 4)], drop=(258,),
+                      tail=px)
+    assert _outcome(_parse_tiff_pure, data) is None
+    assert _outcome(parse_tiff, data) is None
+    data = _mini_tiff([(273, 4, 1, 8 + 2 + 12 * 8 + 4)], tail=px)
+    want = np.repeat(np.frombuffer(px, np.uint8).reshape(4, 4, 1), 3, 2)
+    assert np.array_equal(_outcome(parse_tiff, data), want)
+    assert native.decode_tiff_native(data) is not None
+
+
+@_tiff
+@pytest.mark.parametrize("entries", [4, 256])
+def test_tiff_palette_colormap_same_outcome(entries):
+    """TIFF 6.0 sizes an 8-bit ColorMap at 3 * 256 values. libtiff
+    ignores a shorter one and returns raw indices; the pure decoder
+    expands the indices through it. A full ColorMap decodes natively."""
+    cmap = np.arange(3 * entries, dtype=np.uint16) * 97 % 65536
+    cmap_off = 8 + 2 + 12 * 9 + 4
+    data = _mini_tiff([(262, 3, 1, 3), (273, 4, 1, cmap_off + 6 * entries),
+                       (320, 3, 3 * entries, cmap_off)],
+                      tail=cmap.astype("<u2").tobytes()
+                      + bytes(i % entries for i in range(16)))
+    assert np.array_equal(_outcome(parse_tiff, data),
+                          _outcome(_parse_tiff_pure, data))
+    assert (native.decode_tiff_native(data) is not None) == (entries == 256)

@@ -10,6 +10,8 @@ every self-test because the both-flags-off case writes the identical
 00 bit pair, and rejected by libwebp on every cache/meta-enabled
 stream. zstd/LZ4/xz need no such suite: they decode on the system
 libraries only (codec/compressed.py, tests/test_decompress.py).
+Library-encoded streams go to the pure decoders directly: parse_webp
+and parse_png decode them with the same system libraries.
 """
 
 import ctypes
@@ -20,8 +22,9 @@ import numpy as np
 import pytest
 
 from go_triton_spark.codec.gif import build_gif
-from go_triton_spark.codec.png import build_png, parse_png
-from go_triton_spark.codec.vp8l import build_webp, parse_webp
+from go_triton_spark.codec.png import _parse_png_pure, build_png
+from go_triton_spark.codec.vp8l import _parse_webp_pure, build_webp, \
+    parse_webp
 
 
 def _try_cdll(*names):
@@ -136,7 +139,7 @@ def test_libwebp_streams_decode_here(kind):
                    % 256).astype(np.uint8)
         rgba = np.dstack([rgb, np.full((h, w), 255, np.uint8)])
         data = _libwebp_encode_lossless(rgba)
-        r = parse_webp(data)
+        r = _parse_webp_pure(data)
         assert np.array_equal(r["pixels"], rgb), (kind, h, w)
 
 
@@ -229,7 +232,7 @@ def test_png_both_directions_against_libpng(interlace):
         assert got is not None, msg
         assert np.array_equal(got, rgb), (trial, h, w)
         if not interlace:
-            r = parse_png(_libpng_encode_rgb(rgb))
+            r = _parse_png_pure(_libpng_encode_rgb(rgb))
             assert np.array_equal(r["pixels"], rgb), (trial, h, w)
 
 

@@ -97,9 +97,9 @@ def test_hand_assembled_grayscale_both_polarities():
     """photometric 1 (BlackIsZero) keeps values; 0 (WhiteIsZero)
     inverts — decoder-only paths built entirely by hand."""
     for photo, expect in ((1, [5, 250]), (0, [250, 5])):
-        data_off = 8 + 2 + 12 * 7 + 4
+        data_off = 8 + 2 + 12 * 8 + 4
         data = _hand_ifd("<", [
-            (256, 3, 1, 2), (257, 3, 1, 1),
+            (256, 3, 1, 2), (257, 3, 1, 1), (258, 3, 1, 8),
             (259, 3, 1, 1), (262, 3, 1, photo),
             (273, 4, 1, data_off), (277, 3, 1, 1),
             (279, 4, 1, 2),
@@ -113,14 +113,14 @@ def test_hand_assembled_palette():
     """photometric 3: ColorMap holds 16-bit channel planes (all reds,
     all greens, all blues); indices expand through the high byte."""
     n = 4
-    cmap_off = 8 + 2 + 12 * 8 + 4
+    cmap_off = 8 + 2 + 12 * 9 + 4
     data_off = cmap_off + 3 * n * 2
     cmap = struct.pack("<12H",
                        0x1100, 0x2200, 0x3300, 0x4400,   # reds
                        0x5500, 0x6600, 0x7700, 0x8800,   # greens
                        0x9900, 0xAA00, 0xBB00, 0xCC00)   # blues
     data = _hand_ifd("<", [
-        (256, 3, 1, 2), (257, 3, 1, 2),
+        (256, 3, 1, 2), (257, 3, 1, 2), (258, 3, 1, 8),
         (259, 3, 1, 1), (262, 3, 1, 3),
         (273, 4, 1, data_off), (277, 3, 1, 1),
         (279, 4, 1, 4), (320, 3, 12, cmap_off),
