@@ -19,7 +19,6 @@ from go_triton_spark.session import get_spark, builder
 from go_triton_spark.config import StreamConfig, load_config, config_for_name
 from go_triton_spark.engine import TritonEngine
 from go_triton_spark.sources.tri_datasource import register_tri_datasource
-from go_triton_spark.sources.kinesis_sim import register_kinesis_sim
 
 __version__ = "0.1.0"
 
@@ -31,5 +30,4 @@ __all__ = [
     "config_for_name",
     "TritonEngine",
     "register_tri_datasource",
-    "register_kinesis_sim",
 ]

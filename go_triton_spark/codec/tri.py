@@ -97,18 +97,14 @@ def write_tri_bytes(records: list[dict], flush_bytes: int = 1024 * 1024) -> byte
     return bytes(out)
 
 
-def read_tri_bytes(data: bytes, on_corrupt: str = "skip") -> list[dict]:
-    """Decode a .tri file body into record maps.
-
-    ``on_corrupt``: "skip" (reference semantics: log+drop, keep going
-    where possible), or "raise".
-    """
+def read_tri_bytes(data: bytes) -> list[dict]:
+    """Decode a .tri file body into record maps, skipping what cannot
+    be decoded (reference semantics: drop and keep going where
+    possible; a bad frame stream yields no records)."""
     try:
         body = frame_decompress(data)
     except SnappyError:
-        if on_corrupt == "skip":
-            return []
-        raise
+        return []
     records: list[dict] = []
     pos = 0
     n = len(body)
@@ -116,11 +112,7 @@ def read_tri_bytes(data: bytes, on_corrupt: str = "skip") -> list[dict]:
         try:
             obj, pos = unpackb(body, pos)
         except MsgpackError:
-            if on_corrupt == "skip":
-                break  # cannot resync inside a concatenated stream
-            raise
+            break  # cannot resync inside a concatenated stream
         if isinstance(obj, dict):
             records.append(obj)
-        elif on_corrupt != "skip":
-            raise MsgpackError(f"non-map record: {type(obj)}")
     return records

@@ -29,6 +29,10 @@ from pyspark.sql import functions as F
 
 _PARTITION_COLS = ["stream", "client", "date", "hour"]
 
+# how long expire keeps re-deleting a date dir that a concurrent
+# compact re-creates: about one hour partition's rewrite
+_EXPIRE_RMTREE_BOUND_S = 60.0
+
 
 def coerce_date(d: "_dt.date | str") -> _dt.date:
     """Accept a date, an ISO string (2026-08-14), or the reference's
@@ -147,6 +151,36 @@ def _stable_listdir(path: str) -> list[str]:
     return names
 
 
+def _rmtree_until_gone(path: str) -> None:
+    """rmtree ``path`` until it stays gone; OSError after
+    ``_EXPIRE_RMTREE_BOUND_S`` if a concurrent writer keeps it alive.
+    Only the race is retried (a vanished entry, a dir refilled before
+    its rmdir, the path re-created); any other OSError raises at once."""
+    import errno
+    import shutil
+    import time
+
+    deadline = time.monotonic() + _EXPIRE_RMTREE_BOUND_S
+    last: OSError | None = None
+    while True:
+        try:
+            shutil.rmtree(path)
+        except FileNotFoundError as exc:
+            last = exc  # a peer (or our torn walk) already removed it
+        except OSError as exc:
+            if exc.errno != errno.ENOTEMPTY:
+                raise
+            last = exc  # refilled under a concurrent rename: re-walk
+        if not os.path.lexists(path):
+            return
+        if time.monotonic() > deadline:
+            raise OSError(
+                f"expire: {path} still exists after "
+                f"{_EXPIRE_RMTREE_BOUND_S:.0f}s of deletion passes "
+                f"(concurrent writer resurrecting it?)") from last
+        time.sleep(0.05)
+
+
 def _prune_retrying(prune, attempts: int = 8):
     """Run a pruning walk, re-listing from scratch when it observes a
     mid-walk removal. Bounded: a pathological expire loop still ends
@@ -163,32 +197,14 @@ def _prune_retrying(prune, attempts: int = 8):
 class ArchiveStore:
     """Batch-side archive table: ingest + replay ("cat").
 
-    ``table_format`` (round-6 seam): ``"parquet"`` (default) keeps the
-    path-based layout above — listing-level pruning, rename-based
-    compaction, rmtree expiry. Any other value (``"delta"``,
-    ``"iceberg"``) routes writes and reads through
-    ``format(table_format)`` on the SAME root so a cluster deployment
-    with the connector on its classpath gets a manifest table —
-    snapshot-isolated reads, no rename-swap residue on object stores
-    (SCALE.md round-5 compaction note) — without touching any
-    operator. Maintenance (compact/expire) is engine-specific there
-    (OPTIMIZE / rewrite_data_files / VACUUM) and raises with a
-    pointer rather than pretending rename semantics apply.
+    The archive is a path-based parquet layout
+    (``stream=/client=/date=/hour=``): listing-level pruning,
+    rename-based compaction, rmtree expiry.
     """
 
-    def __init__(self, spark: SparkSession, root: str,
-                 table_format: str = "parquet"):
+    def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        self.table_format = table_format
-
-    def _require_parquet(self, op: str) -> None:
-        if self.table_format != "parquet":
-            raise NotImplementedError(
-                f"{op} is filesystem-rename based and only applies to the "
-                f"parquet layout; for {self.table_format!r} use the table "
-                f"format's own maintenance (Delta OPTIMIZE/VACUUM, Iceberg "
-                f"rewrite_data_files/expire_snapshots)")
 
     # ------------------------------------------------------------- write
 
@@ -215,14 +231,12 @@ class ArchiveStore:
             # narrow->wide convert per file)
             .withColumn("_archive_sort", F.lit(ts).cast("long"))
         )
-        if mode != "append" or self.table_format != "parquet" \
-                or "://" in self.root:
-            # overwrite / manifest formats / object stores: the
-            # engine-native writer owns the commit protocol
+        if mode != "append" or "://" in self.root:
+            # overwrite / object stores: the engine-native writer owns
+            # the commit protocol
             (out.write.mode(mode)
                 .partitionBy(*_PARTITION_COLS)
-                .format(self.table_format)
-                .save(self.root))
+                .parquet(self.root))
             return
         # CONCURRENT-APPEND SAFETY on local parquet roots (r10
         # expire-compact matrix find): two batch appends to the SAME
@@ -368,15 +382,6 @@ class ArchiveStore:
         end_date = coerce_date(end_date) if end_date else start_date
         wanted = {d.strftime("%Y%m%d")
                   for d in list_dates_from_range(start_date, end_date)}
-        if self.table_format != "parquet":
-            # manifest table (round-6 seam): the format's own log
-            # handles file listing, partition pruning, and snapshot
-            # isolation — the manual listing/pruning/retry machinery
-            # below exists precisely because plain parquet paths lack
-            # those. Filters still prune via the manifest's stats.
-            src = self.spark.read.format(self.table_format).load(self.root)
-            return self._filter_cat(src, stream, start_date, end_date,
-                                    client, ordered)
         if not os.path.isdir(self.root) and "://" not in self.root:
             raise FileNotFoundError(
                 f"archive root {self.root!r} does not exist — nothing has "
@@ -644,9 +649,7 @@ class ArchiveStore:
         subtree (all clients), date dirs whose mtime is within
         ``max_age_days`` — residue only exists in partitions the
         crashed writer was touching, so the walk is bounded by recent
-        activity, not archive lifetime. Local roots only; object-store
-        deployments route to the manifest table_format seam, whose log
-        never lists uncommitted files. Quarantine name =
+        activity, not archive lifetime. Local roots only. Quarantine name =
         '.<name>.crash': the dot prefix hides it from Spark listings
         AND the changed suffix keeps it out of compact's *.parquet
         enumeration. Renames, never deletes — an operator can inspect
@@ -778,10 +781,9 @@ class ArchiveStore:
         the non-Linux fallback). A reader that LISTED the old files
         just before the swap may still fail its open with
         FILE_NOT_EXIST — path-based filesystems cannot keep replaced
-        paths alive — and needs one retry; cat re-lists fresh. On a
-        real object store use a table format (Delta/Iceberg
-        rewrite-files) instead of rename; this implementation targets
-        filesystem-backed archives.
+        paths alive — and needs one retry; cat re-lists fresh. This
+        implementation targets filesystem-backed archives; an
+        object-store root is refused.
 
         Live-ingest safety (round-5): hour partitions younger than
         ``min_age_hours`` are SKIPPED (counted in ``hours_skipped``).
@@ -793,16 +795,14 @@ class ArchiveStore:
         ``compact`` safe to run as a cron next to a live ``store``
         with no coordination.
         """
-        self._require_parquet("compact")
         if "://" in self.root:
             # rename-based swaps cannot be atomic on object stores
-            # (S3 rename = copy+delete, a visible window) — the honest
-            # answer is the manifest seam, not a racy emulation
+            # (S3 rename = copy+delete, a visible window), and a racy
+            # emulation would be worse than no compaction
             raise NotImplementedError(
                 "compact is rename-based and needs a real filesystem; "
-                "on an object store use table_format='delta'/'iceberg' "
-                "(ArchiveStore seam) and the format's OPTIMIZE / "
-                "rewrite_data_files")
+                "an object-store archive root cannot be compacted in "
+                "place")
         date = coerce_date(date)
         slice_dir = os.path.join(
             self.root, f"stream={stream}", f"client={client}",
@@ -988,8 +988,7 @@ class ArchiveStore:
         staging dir where the age sweep will reap it with the doomed
         rewrite input — a manifest-less rename design cannot tell a
         straggler from already-rewritten input after the fact (a
-        table format's atomic commit is the 100 TB answer, see
-        ``compact``)."""
+        table format's atomic commit would close it)."""
         parent, base = os.path.split(hour_dir)
         lock = self._acquire_hour_lock(parent, base)
         if lock is None:
@@ -1122,26 +1121,6 @@ class ArchiveStore:
         old_dir = os.path.join(parent, f".{base}._compact_old.{token}")
         self._sweep_stale_staging(parent, base)
 
-        def _audit(msg):
-            # TRITON_COMPACT_AUDIT=1 traces the swap sequence with
-            # monotonic timestamps + inodes — the instrument that
-            # localized the r10 torn-enumeration race when correlated
-            # against tools/stress_race_matrix.py's watcher timeline.
-            # Off (the default) it is a single env check per call.
-            if not os.environ.get("TRITON_COMPACT_AUDIT"):
-                return
-            import time as _t
-
-            def _ino(p):
-                try:
-                    return os.stat(p).st_ino
-                except OSError:
-                    return -1
-            print(f"AUDIT t={_t.monotonic():.6f} {msg} "
-                  f"hour_ino={_ino(hour_dir)} tmp_ino={_ino(tmp_dir)}",
-                  flush=True)
-
-        _audit("pre-write")
         # read PINNED to the entry listing (r12 ingest-compact soak):
         # reading the DIRECTORY let the scan pick up part files a
         # concurrent backfill ingest landed after `files` was taken,
@@ -1152,7 +1131,6 @@ class ArchiveStore:
             *[os.path.join(hour_dir, f) for f in files])
              .repartitionByRange(n_out, "_archive_sort")
              .write.parquet(tmp_dir))
-        _audit("post-write")
 
         def _rescue_stragglers(doomed: str) -> int:
             # A concurrent backfill ingest (ingest_dataframe with an
@@ -1248,9 +1226,7 @@ class ArchiveStore:
             # atomic exchange: the partition is NEVER absent; the
             # old files (now under the hidden tmp name) vanish only
             # from readers' pre-swap path lists — one retry heals
-            _audit("post-exchange pre-rmtree")
             _discard_doomed(tmp_dir)
-            _audit("post-rmtree")
         else:
             # fallback pair of renames: a listing in the gap can
             # see the hour briefly absent
@@ -1283,9 +1259,6 @@ class ArchiveStore:
         reference has no retention at all (archives accumulate in S3
         forever); this is north-star data-lifecycle surface.
         """
-        import shutil
-
-        self._require_parquet("expire")
         slice_dir = os.path.join(
             self.root, f"stream={stream}", f"client={client}")
         cutoff = coerce_date(keep_after).strftime("%Y%m%d")
@@ -1317,29 +1290,15 @@ class ArchiveStore:
                 target = os.path.join(slice_dir, name)
                 # Deletion must be IDEMPOTENT against concurrent
                 # maintenance: a peer expire may have dropped the date
-                # between our listdir and here (FileNotFoundError on
-                # the root), and a concurrent compact of the same date
-                # renames entries (hour-dir swap, straggler rescue,
-                # quarantine) WHILE our rmtree walk unlinks them — the
-                # walk then hits paths that vanished mid-stream
-                # (FileNotFoundError from a child) or a directory that
-                # briefly re-gains an entry (ENOTEMPTY). The goal
-                # state is simply "date dir gone": swallow
-                # already-gone, retry once over a torn walk, and
-                # surface anything persistent loudly.
-                try:
-                    shutil.rmtree(target)
-                except FileNotFoundError:
-                    pass        # peer got there first — goal state holds
-                except OSError:
-                    try:
-                        shutil.rmtree(target)   # re-walk post-swap state
-                    except FileNotFoundError:
-                        pass
-                if os.path.lexists(target):
-                    raise OSError(
-                        f"expire: {target} survived two deletion "
-                        f"passes (concurrent writer resurrecting it?)")
+                # already, and a concurrent compact of the same date
+                # renames entries WHILE our rmtree walk unlinks them
+                # (FileNotFoundError from a child, ENOTEMPTY) — and its
+                # Spark write of `.hour=NN._compact_tmp.*` re-creates
+                # the date dir after a walk has removed it. The goal
+                # state is "date dir gone": repeat the rmtree until it
+                # holds, for as long as one hour's rewrite can take,
+                # then fail loudly.
+                _rmtree_until_gone(target)
                 stats["dropped"] += 1
             else:
                 stats["kept"] += 1

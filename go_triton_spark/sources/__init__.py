@@ -2,10 +2,13 @@
 
 OSS Spark ships no first-party Kinesis source (SURVEY section 7 hard
 part #1); the reference's own tests never touch real Kinesis either
-(triton/test_util.go fakes). The pluggable layer here mirrors that:
-file/rate/memory sources for tests and local mode, and a documented
-adapter point for a Kinesis connector (e.g. spark-sql-kinesis) or a
-Kinesis->file bridge in production.
+(triton/test_util.go fakes). Streams come from ``open_stream``: the
+boto3-backed ``format("kinesis")`` source (tests and benchmarks drive
+it with a scripted client through its ``client_factory`` option), a
+file-drop directory (also the Kinesis->Firehose->files bridge), or
+Spark's rate source. ``.tri`` archives are read and written in batch.
+Every reader coerces decoded records to the declared schema through
+``codec.decode.converter``.
 """
 
 from go_triton_spark.sources.tri_source import read_tri, write_tri

@@ -24,9 +24,9 @@ has no first-party Kinesis source to delegate to. Payloads stay
 ``KINESIS_SCHEMA``. boto3 is imported lazily INSIDE the default client
 factory — the module imports fine without AWS anywhere (CI never
 touches it; tests inject a scripted fake exactly like
-triton/test_util.go:73-162). For shard-parallel simulated ingest use
-``kinesis_sim``; for cluster-scale production fan-out, front a
-connector or bridge (SURVEY §7 hard-part #1).
+triton/test_util.go:73-162). For cluster-scale production fan-out,
+bridge Kinesis to files (Firehose) and use the file source (SURVEY §7
+hard-part #1).
 """
 
 from __future__ import annotations
@@ -70,7 +70,8 @@ def default_client(region: str | None = None, endpoint_url: str | None = None):
     except ImportError as exc:  # pragma: no cover - AWS-free CI path
         raise ImportError(
             "boto3 is required for the real-AWS kinesis source; "
-            "install boto3 or use the 'kinesis_sim' source") from exc
+            "install boto3, or pass a scripted client via the "
+            "client_factory option") from exc
     kwargs = {}
     if region:
         kwargs["region_name"] = region
@@ -319,7 +320,7 @@ class KinesisSimpleStreamReader:
                     # can overshoot end_seq, and replaying records past
                     # the checkpoint double-delivers them (they arrive
                     # again in the next live batch) — found by the
-                    # resharding fuzz (test_kinesis_sim.py)
+                    # resharding fuzz (test_kinesis_boto3.py)
                     if _seq_ge(rec["SequenceNumber"], end_seq):
                         # numeric-aware boundary test: string != would
                         # treat a numerically-equal but differently-

@@ -11,10 +11,6 @@ Streaming's equivalents, selected by ``StreamConfig.options['source']``:
 - ``memory`` : not a real source — tests build their own input via
                ``spark.readStream.format("rate")`` or MemoryStream from
                the Scala side; we expose ``file`` for determinism.
-- ``kinesis_sim``: shard-parallel Kinesis simulator (registered Python
-               DataSource, ``sources/kinesis_sim.py``): shard dirs ->
-               input partitions, per-shard file offsets in the query
-               checkpoint, LATEST/TRIM_HORIZON, resharding discovery.
 - ``kinesis``: real-AWS adapter (``sources/kinesis_boto3.py``): a
                boto3-backed Python DataSource mirroring the reference's
                poll loop (GetShardIterator/GetRecords, rate limit,
@@ -22,11 +18,6 @@ Streaming's equivalents, selected by ``StreamConfig.options['source']``:
                LATEST / TRIM_HORIZON / AFTER_SEQUENCE_NUMBER offsets in
                the query checkpoint. boto3 is imported lazily; tests
                inject a scripted fake service via ``client_factory``.
-- ``kinesis_connector``: adapter point for a third-party JVM connector
-               (e.g. spark-sql-kinesis) when one is on the classpath;
-               maps the reference's start positions onto the
-               connector's ``startingposition`` and raises with
-               guidance if absent.
 
 Start-position semantics (S2/S7): for file sources, "TRIM_HORIZON" ==
 process existing files; "LATEST" == a REAL backlog skip — the files
@@ -150,20 +141,6 @@ def open_stream(spark: SparkSession, cfg: StreamConfig,
             seen = _latest_seen_files(spark, path, seen_files_log)
             return _exclude_seen_files(spark, reader.load(path), seen)
         return reader.load(path)
-    if source == "kinesis_sim":
-        path = cfg.options.get("path")
-        if not path:
-            raise ValueError(
-                f"stream {cfg.stream_name!r}: kinesis_sim needs options.path")
-        if schema is None:
-            raise ValueError("kinesis_sim requires a declared schema "
-                             "(schema-on-read; SURVEY section 1.3)")
-        from go_triton_spark.sources.kinesis_sim import register_kinesis_sim
-        register_kinesis_sim(spark)
-        return (spark.readStream.format("kinesis_sim").schema(schema)
-                .option("start_position",
-                        cfg.options.get("start_position", "TRIM_HORIZON"))
-                .load(path))
     if source == "rate":
         rows_per_sec = str(cfg.options.get("rows_per_second", 1000))
         return (spark.readStream.format("rate")
@@ -185,23 +162,4 @@ def open_stream(spark: SparkSession, cfg: StreamConfig,
             if cfg.options.get(opt):
                 reader = reader.option(opt, str(cfg.options[opt]))
         return reader.load()
-    if source == "kinesis_connector":
-        fmt = cfg.options.get("connector_format", "aws-kinesis")
-        start = {
-            "LATEST": "latest",
-            "TRIM_HORIZON": "trim_horizon",
-        }.get(cfg.options.get("start_position", "TRIM_HORIZON"), "trim_horizon")
-        try:
-            return (spark.readStream.format(fmt)
-                    .option("streamName", cfg.stream_name)
-                    .option("region", cfg.region or "us-west-1")
-                    .option("startingposition", start)
-                    .load())
-        except Exception as e:  # connector jar absent in this environment
-            raise NotImplementedError(
-                "No Kinesis connector on the classpath. Deploy with a "
-                "Structured Streaming Kinesis connector (e.g. "
-                "spark-streaming-sql-kinesis / Kinesis Data Analytics), or "
-                "bridge Kinesis->files (Firehose) and use source=file. "
-                f"Underlying error: {e}") from e
     raise ValueError(f"unknown stream source type: {source!r}")

@@ -4,13 +4,10 @@
 Where ``tri_source.read_tri`` composes binaryFile + mapInPandas, this
 packages the same codec as a first-class format: schema declared with
 ``.schema(...)``, one input partition per archive file (the reference's
-unit of parallelism — one S3 object, triton/archive.go:27-43), and a
-streaming mode that tails a directory in archive-key order, the
-file-backed stand-in for a Kinesis shard iterator (SURVEY S1/S2: each
-new file plays the role of a GetRecords batch; the stream offset is the
-count of files consumed, persisted in the query checkpoint exactly
-where the reference kept (shard -> seq_num) rows in SQL,
-triton/checkpoint.go:27-76).
+unit of parallelism — one S3 object, triton/archive.go:27-43), records
+coerced by ``codec.decode.converter`` like every other reader, and a
+job-atomic ``df.write.format("tri")``. It has no streaming mode: the
+streaming source is ``format("kinesis")`` (``kinesis_boto3.py``).
 
 Registration is per-session: ``register_tri_datasource(spark)``. The
 decode runs in the Python data-source worker (Arrow-batched back to the
@@ -31,7 +28,6 @@ from pyspark.sql.datasource import (
     DataSourceReader,
     DataSourceWriter,
     InputPartition,
-    SimpleDataSourceStreamReader,
     WriterCommitMessage,
 )
 from pyspark.sql import types as T
@@ -53,15 +49,14 @@ def _decode_file(fpath: str, schema: T.StructType) -> Iterator[tuple]:
     """Decode one archive into schema-ordered tuples (corrupt-skip)."""
     # local imports: this body runs inside the Python data-source
     # worker, which pickles the reader object by value
+    from go_triton_spark.codec.decode import converter
     from go_triton_spark.codec.tri import read_tri_bytes
-    from go_triton_spark.sources.tri_source import _to_pandas_cell
 
+    convs = [(f.name, converter(f.dataType)) for f in schema.fields]
     with open(fpath, "rb") as fh:
         data = fh.read()
-    for rec in read_tri_bytes(data, on_corrupt="skip"):
-        yield tuple(
-            _to_pandas_cell(rec.get(f.name), f.dataType) for f in schema.fields
-        )
+    for rec in read_tri_bytes(data):
+        yield tuple(c(rec.get(n)) for n, c in convs)
 
 
 class _TriFilePartition(InputPartition):
@@ -83,39 +78,8 @@ class TriBatchReader(DataSourceReader):
         return _decode_file(partition.path, self.schema_)
 
 
-class TriStreamReader(SimpleDataSourceStreamReader):
-    """Directory-tailing micro-batch reader. Offset = number of files
-    consumed from the sorted listing; new files append strictly after
-    (hourly-rotated keys sort by time). Replays are exact: the same
-    offset range always names the same files."""
-
-    def __init__(self, options, schema: T.StructType):
-        self.root = options.get("path")
-        if not self.root:
-            raise ValueError("tri datasource requires .load(path)")
-        self.schema_ = schema
-
-    def initialOffset(self) -> dict:
-        return {"n_files": 0}
-
-    def read(self, start: dict):
-        files = _list_tri_files(self.root)
-        begin = start["n_files"]
-        rows: list[tuple] = []
-        for f in files[begin:]:
-            rows.extend(_decode_file(f, self.schema_))
-        return iter(rows), {"n_files": len(files)}
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        files = _list_tri_files(self.root)
-        rows: list[tuple] = []
-        for f in files[start["n_files"]:end["n_files"]]:
-            rows.extend(_decode_file(f, self.schema_))
-        return iter(rows)
-
-
 class TriDataSource(DataSource):
-    """.tri archive format (batch + streaming read)."""
+    """.tri archive format (batch read, job-atomic append write)."""
 
     @classmethod
     def name(cls) -> str:
@@ -128,9 +92,6 @@ class TriDataSource(DataSource):
 
     def reader(self, schema: T.StructType) -> TriBatchReader:
         return TriBatchReader(self.options, schema)
-
-    def simpleStreamReader(self, schema: T.StructType) -> TriStreamReader:
-        return TriStreamReader(self.options, schema)
 
     def writer(self, schema: T.StructType, overwrite: bool):
         if overwrite:

@@ -5,7 +5,8 @@ archive files as (path, content) rows — one Spark task per file, which
 is exactly the reference's unit of parallelism (one S3 object). A
 ``mapInPandas`` generator then snappy-decompresses and msgpack-decodes
 each file (triton/archive_reader.go:12-28 semantics, corrupt-skip per
-triton/stream_reader.go:174-194) and projects into the declared schema.
+triton/stream_reader.go:174-194) and projects into the declared schema
+through ``codec.decode.converter``, the rule every reader shares.
 
 At 100 TB scale this is embarrassingly parallel (no shuffle: scan ->
 narrow decode), and the decode is Arrow-batched per file. Canonical
@@ -21,7 +22,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 _META_FIELDS = [
@@ -31,59 +31,21 @@ _META_FIELDS = [
 ]
 
 
-def _to_pandas_cell(v, dt: T.DataType):
-    """Coerce one decoded msgpack value to the declared Spark type."""
-    if v is None:
-        return None
-    try:
-        if isinstance(dt, T.StringType):
-            return v if isinstance(v, str) else str(v)
-        if isinstance(dt, (T.LongType, T.IntegerType)):
-            return int(v)
-        if isinstance(dt, (T.DoubleType, T.FloatType)):
-            return float(v)
-        if isinstance(dt, T.BooleanType):
-            return bool(v)
-        if isinstance(dt, T.BinaryType):
-            return bytes(v)
-        if isinstance(dt, T.TimestampType):
-            if isinstance(v, _dt.datetime):
-                return v
-            if isinstance(v, (int, float)):
-                return _dt.datetime.fromtimestamp(v, tz=_dt.timezone.utc)
-            return None
-        if isinstance(dt, T.ArrayType):
-            if isinstance(v, (list, tuple)):
-                return [_to_pandas_cell(x, dt.elementType) for x in v]
-            return None
-        if isinstance(dt, T.StructType):
-            if isinstance(v, dict):
-                return {f.name: _to_pandas_cell(v.get(f.name), f.dataType) for f in dt.fields}
-            return None
-        if isinstance(dt, T.MapType):
-            if isinstance(v, dict):
-                return {str(k): _to_pandas_cell(x, dt.valueType) for k, x in v.items()}
-            return None
-        return v
-    except (TypeError, ValueError, OverflowError):
-        return None  # permissive: uncoercible -> null, not failure
-
-
 def read_tri(spark: SparkSession, path: str, schema: T.StructType,
              path_glob: str = "*.tri", recursive: bool = True) -> DataFrame:
     """Read .tri archives under ``path`` into a DataFrame of ``schema``
     plus metadata columns ``_archive_path/_archive_date/_archive_sort``
     (parsed from the key grammar, for replay-order fidelity, SURVEY S15).
     """
+    from go_triton_spark.codec.decode import converter
     from go_triton_spark.codec.tri import parse_key_name, read_tri_bytes
 
     out_schema = T.StructType(list(schema.fields) + _META_FIELDS)
-    names = [f.name for f in schema.fields]
-    dtypes = [f.dataType for f in schema.fields]
+    convs = [(f.name, converter(f.dataType)) for f in schema.fields]
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows: list[dict] = []
+            rows: list[tuple] = []
             for path_val, content in zip(pdf["path"], pdf["content"]):
                 # key suffix: .../YYYYMMDD/name-client-ts.tri
                 tail = "/".join(str(path_val).split("/")[-2:])
@@ -92,14 +54,12 @@ def read_tri(spark: SparkSession, path: str, schema: T.StructType,
                     date_s, sort_v = ak.t.strftime("%Y%m%d"), ak.sort_value
                 except ValueError:
                     date_s, sort_v = None, None
+                meta = (str(path_val), date_s, sort_v)
                 for rec in read_tri_bytes(bytes(content)):
-                    row = {n: _to_pandas_cell(rec.get(n), dt)
-                           for n, dt in zip(names, dtypes)}
-                    row["_archive_path"] = str(path_val)
-                    row["_archive_date"] = date_s
-                    row["_archive_sort"] = sort_v
-                    rows.append(row)
-            yield pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
+                    rows.append(tuple(c(rec.get(n)) for n, c in convs) + meta)
+            # object columns: pandas would widen a long column holding
+            # a null to float64 and round values above 2**53
+            yield pd.DataFrame(rows, columns=out_schema.names, dtype="object")
 
     binary = (
         spark.read.format("binaryFile")

@@ -9,6 +9,8 @@ triton/stream_test.go:88-184). No AWS, no boto3 import anywhere.
 
 from __future__ import annotations
 
+import random
+
 import pytest
 
 from go_triton_spark.sources.kinesis_boto3 import (
@@ -320,6 +322,64 @@ events:
     assert types == {"click", "view"}
 
 
+OFF_TYPE_TS = 1_700_000_000      # epoch seconds: 2023-11-14 22:13:20 UTC
+
+
+def off_type_client():
+    """``client_factory`` target: six well-typed msgpack events on two
+    shards plus one record whose every field is off-type for
+    EVENTS_SCHEMA."""
+    import datetime as dt
+
+    from go_triton_spark.codec.msgpack_codec import packb
+
+    ts = dt.datetime(2026, 8, 13, 12, 0, tzinfo=dt.timezone.utc)
+    c = FakeKinesisClient()
+    for i in range(6):
+        c.add_record("events", f"shard-000{i % 2}", f"a{i}", packb({
+            "event_id": i, "ts": ts, "user_id": i % 3,
+            "event_type": "click", "value": float(i), "props": "{}"}))
+    c.add_record("events", "shard-0001", "a6", packb({
+        "event_id": "6", "ts": OFF_TYPE_TS, "user_id": True,
+        "event_type": 7, "value": "x", "props": {"k": [1, 2]}}))
+    return c
+
+
+def test_store_archives_around_off_type_record(spark, tmp_path):
+    """One record of the wrong types in a format("kinesis") store must
+    not stop the query: every field converts or becomes null, and all
+    seven records are archived."""
+    import datetime as dt
+
+    from go_triton_spark.config import load_config
+    from go_triton_spark.engine import TritonEngine
+    from go_triton_spark.types import EVENTS_SCHEMA
+
+    cfg = load_config("""
+events:
+  name: events
+  partition_key: user_id
+  source: kinesis
+  client_factory: tests.test_kinesis_boto3:off_type_client
+  min_poll_interval: 0
+  polls_per_batch: 8
+""")
+    eng = TritonEngine(spark, str(tmp_path), config=cfg, client="kin")
+    pipe = eng.store("events", schema=EVENTS_SCHEMA, once=True)
+    try:
+        pipe.await_once()
+        assert pipe.query.exception() is None, pipe.query.exception()
+    finally:
+        pipe.stop()
+    rows = {r["event_id"]: r for r in eng.cat("events", dt.date.today())
+            .select(*EVENTS_SCHEMA.names).collect()}
+    assert sorted(rows) == list(range(7))
+    odd = rows[6]
+    assert (odd["user_id"], odd["event_type"], odd["value"],
+            odd["props"]) == (1, "7", None, '{"k": [1, 2]}')
+    assert odd["ts"].timestamp() == OFF_TYPE_TS
+
+
 def test_replay_with_numeric_sequence_numbers_across_lengths():
     """Real Kinesis sequence numbers are decimal strings ordered
     NUMERICALLY; replay must not stop early when the end sequence is
@@ -414,3 +474,183 @@ def test_empty_child_shard_survives_reader_restart_under_latest():
     assert [(s, bytes(d)) for s, _q, _p, _t, d in rows] == \
         [("shard-0001", b"child-early")]
     assert end3["shard-0001"] == "200"
+
+
+# =====================================================================
+# Property-based resharding fuzz (VERDICT r5 ask #6)
+# =====================================================================
+#
+# Random split/merge/empty-child/append/read/restart sequences against
+# a scripted resharding Kinesis service, checked against an in-memory
+# reference log: NO LOSS, NO DUP, per-shard order preserved (the
+# stream_reader.go ordering guarantee), and readBetweenOffsets replays
+# exactly the committed span. Seeded-random over >=100 topologies so
+# every failure prints its reproducible seed.
+
+
+class ReshardingFakeKinesis:
+    """Scripted service whose topology mutates mid-stream: shards can
+    split/merge (children start empty), closed parents stop growing.
+    Sequence numbers are globally monotonic zero-padded decimals (the
+    real Kinesis shape; numeric order = stream order). get_records
+    serves up to Limit records per call — unlike the one-record mocks,
+    a fetch can OVERSHOOT a committed range, which is exactly what a
+    recovery replay must tolerate."""
+
+    def __init__(self):
+        self.shards: dict[str, list] = {}
+        self.closed: set[str] = set()
+        self.arrivals: dict[str, int] = {}   # seq -> arrival ns
+        self._seq = 0
+        self._next_shard = 0
+
+    def new_shard(self) -> str:
+        name = f"shardId-{self._next_shard:04d}"
+        self._next_shard += 1
+        self.shards[name] = []
+        return name
+
+    def append(self, shard: str, data: bytes) -> str:
+        import time as _t
+        assert shard not in self.closed
+        self._seq += 1
+        seq = f"{self._seq:012d}"
+        self.shards[shard].append((seq, data))
+        self.arrivals[seq] = _t.time_ns()
+        return seq
+
+    def split(self, parent: str) -> tuple[str, str]:
+        self.closed.add(parent)
+        return self.new_shard(), self.new_shard()
+
+    def merge(self, a: str, b: str) -> str:
+        self.closed.update((a, b))
+        return self.new_shard()
+
+    def open_shards(self) -> list[str]:
+        return [s for s in self.shards if s not in self.closed]
+
+    # --- the boto3 client surface the reader uses -------------------
+    def describe_stream(self, StreamName):
+        return {"StreamDescription": {
+            "Shards": [{"ShardId": s} for s in sorted(self.shards)],
+            "StreamName": StreamName, "StreamStatus": "ACTIVE"}}
+
+    def get_shard_iterator(self, StreamName, ShardId, ShardIteratorType,
+                           StartingSequenceNumber=None, Timestamp=None):
+        recs = self.shards.get(ShardId, [])
+        if ShardIteratorType == "AFTER_SEQUENCE_NUMBER":
+            pos = StartingSequenceNumber
+        elif ShardIteratorType == "LATEST":
+            pos = recs[-1][0] if recs else ""
+        elif ShardIteratorType == "AT_TIMESTAMP":
+            ns = int(Timestamp.timestamp() * 1e9)
+            before = [r[0] for r in recs if self.arrivals[r[0]] < ns]
+            pos = before[-1] if before else ""
+        else:
+            pos = ""
+        return {"ShardIterator": f"{StreamName}|{ShardId}|{pos}"}
+
+    def get_records(self, ShardIterator, Limit):
+        _, shard, pos = ShardIterator.split("|")
+        out = [r for r in self.shards[shard] if r[0] > pos][:Limit]
+        nxt = out[-1][0] if out else pos
+        return {"NextShardIterator": ShardIterator.rsplit("|", 1)[0] + f"|{nxt}",
+                "Records": [{"SequenceNumber": sn, "Data": d,
+                             "PartitionKey": "pk"} for sn, d in out],
+                "MillisBehindLatest": 0}
+
+
+def _run_topology(seed: int) -> None:
+    rng = random.Random(seed)
+    svc = ReshardingFakeKinesis()
+    for _ in range(rng.randint(1, 3)):
+        svc.new_shard()
+
+    latest = rng.random() < 0.3
+    # pre-start backlog (skipped under LATEST)
+    skipped: set[bytes] = set()
+    for _ in range(rng.randint(0, 5)):
+        sh = rng.choice(svc.open_shards())
+        data = f"backlog-{seed}-{svc._seq}".encode()
+        svc.append(sh, data)
+        if latest:
+            skipped.add(data)
+
+    def new_reader():
+        return KinesisSimpleStreamReader(
+            svc, "s", start_position="LATEST" if latest else "TRIM_HORIZON",
+            min_interval=0.0)
+
+    # let the clock tick past the backlog appends: the AT_TIMESTAMP
+    # boundary travels as a datetime (microsecond resolution), so a
+    # same-microsecond backlog record would straddle it
+    import time as _t
+    t0 = _t.time_ns()
+    while _t.time_ns() - t0 < 2_000:
+        pass
+    reader = new_reader()
+    offsets = reader.initialOffset()
+    consumed: list[tuple] = []
+    history: list[tuple] = []
+
+    def do_read():
+        nonlocal offsets
+        start = dict(offsets)
+        rows, offsets = reader.read(start)
+        consumed.extend(rows)
+        history.append((start, dict(offsets), rows))
+
+    n_appended = 0
+    for _ in range(rng.randint(6, 18)):
+        op = rng.random()
+        open_shards = svc.open_shards()
+        if op < 0.45 and open_shards:
+            for _ in range(rng.randint(1, 4)):
+                sh = rng.choice(open_shards)
+                svc.append(sh, f"d-{seed}-{svc._seq}".encode())
+                n_appended += 1
+        elif op < 0.55 and len(open_shards) >= 1:
+            svc.split(rng.choice(open_shards))      # children start EMPTY
+        elif op < 0.62 and len(open_shards) >= 2:
+            a, b = rng.sample(open_shards, 2)
+            svc.merge(a, b)
+        elif op < 0.85:
+            do_read()
+        else:
+            reader = new_reader()                   # restart from offsets
+    # drain: two consecutive empty reads = done
+    empties = 0
+    for _ in range(60):
+        before = len(consumed)
+        do_read()
+        empties = empties + 1 if len(consumed) == before else 0
+        if empties >= 2:
+            break
+
+    # --- the reference-log invariants -------------------------------
+    all_data = [d for recs in svc.shards.values() for _, d in recs]
+    want = sorted(d for d in all_data if d not in skipped)
+    got = sorted(bytes(r[4]) for r in consumed)
+    assert got == want, (
+        f"seed={seed}: loss/dup — consumed {len(got)} vs appended "
+        f"{len(want)} (latest={latest})")
+    # per-shard order strictly increasing across batches and restarts
+    per_shard: dict[str, list] = {}
+    for r in consumed:
+        per_shard.setdefault(r[0], []).append(int(r[1]))
+    for sh, seqs in per_shard.items():
+        assert seqs == sorted(seqs) and len(set(seqs)) == len(seqs), (
+            f"seed={seed}: order violated on {sh}")
+    # replay determinism: readBetweenOffsets over a committed span
+    # returns EXACTLY that span's rows — no overshoot into later data
+    for start, end, rows in rng.sample(history, min(3, len(history))):
+        replayed = new_reader().readBetweenOffsets(start, end)
+        assert sorted(bytes(r[4]) for r in replayed) == \
+            sorted(bytes(r[4]) for r in rows), (
+            f"seed={seed}: replay of {start}->{end} diverged")
+
+
+def test_resharding_fuzz_100_topologies():
+    for seed in range(200):
+        _run_topology(seed)

@@ -221,6 +221,8 @@ def test_skip_to_latest_file_source_skips_backlog(engine, tmp_path):
     assert out.count() == 5  # new file archived, snapshot not re-taken
     assert set(r[0] for r in out.select("event_id").collect()) == \
         set(range(100, 105))
+    # the override never mutates the shared stream config
+    assert "start_position" not in engine.configs["events"].options
 
 
 def test_skip_to_latest_excludes_backlog_files_with_spaces(engine, tmp_path):

@@ -1,9 +1,7 @@
 """spark.read.format('tri'): the PySpark 4 Python DataSource packaging
 of the .tri codec — batch parity with read_tri, per-file partitions,
-corrupt-skip, and the directory-tailing stream reader (checkpointed
-offsets, incremental batches)."""
+corrupt-skip, and the job-atomic writer."""
 
-import datetime as dt
 import os
 
 import pytest
@@ -12,8 +10,6 @@ from pyspark.sql import functions as F
 from go_triton_spark.sources.tri_datasource import register_tri_datasource
 from go_triton_spark.sources.tri_source import read_tri, write_tri
 from go_triton_spark.types import EVENTS_SCHEMA
-
-UTC = dt.timezone.utc
 
 
 @pytest.fixture()
@@ -67,37 +63,6 @@ def test_tri_format_requires_schema(registered, events_df, tmp_path):
     write_tri(events_df, out, "events", "alpha")
     with pytest.raises(Exception, match="schema"):
         spark.read.format("tri").load(out).collect()
-
-
-def test_tri_stream_incremental_files(registered, events_df, tmp_path):
-    """New archive file -> exactly the new rows in the next batch;
-    offsets checkpoint across restarts (S1/S2/S7 semantics)."""
-    spark = registered
-    out = str(tmp_path / "arch")
-    ckpt = str(tmp_path / "ckpt")
-    first = events_df.where("event_id < 60")
-    second = events_df.where("event_id >= 60")
-    write_tri(first, out, "events", "alpha",
-              when=dt.datetime(2026, 8, 13, 10, 0, tzinfo=UTC))
-
-    def drain():
-        captured = []
-        q = (spark.readStream.format("tri").schema(EVENTS_SCHEMA).load(out)
-             .writeStream.foreachBatch(
-                 lambda df, bid: captured.extend(df.collect()))
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-        return captured
-
-    got1 = drain()
-    assert len(got1) == first.count()
-    write_tri(second, out, "events", "alpha",
-              when=dt.datetime(2026, 8, 13, 11, 0, tzinfo=UTC))
-    got2 = drain()
-    assert len(got2) == second.count()  # only the new file's rows
-    assert {r.event_id for r in got1} | {r.event_id for r in got2} == \
-        {r.event_id for r in events_df.select("event_id").collect()}
 
 
 def test_tri_format_write_path(registered, events_df, tmp_path):
